@@ -50,6 +50,8 @@ from .pandas_edge import (
 
 TS_COL = "ts_sec"  # double epoch-seconds, exact grid arithmetic
 PART_COL = "chunk_start"  # long, partition key
+#: most concurrent sensor writes one write_points_multi payload submits
+_MULTI_WRITE_THREADS = 8
 
 
 def _q(name: str) -> str:
@@ -297,7 +299,6 @@ class OngTsdbSpark:
         per_sensor: dict[str, list[tuple[str, float, float]]],
         fill_value: float = 0.0,
         key: str | None = None,
-        max_parallel: int = 8,
     ) -> None:
         """Upsert several sensors of one db from a single batch payload
         (the `/influx_binary` shape, reference server.py:317-327).
@@ -325,7 +326,7 @@ class OngTsdbSpark:
             self.write_points(db, sensor, pts, fill_value=fill_value, key=key)
             return
         with ThreadPoolExecutor(
-            max_workers=min(max_parallel, len(per_sensor))
+            max_workers=min(_MULTI_WRITE_THREADS, len(per_sensor))
         ) as pool:
             futures = [
                 (
@@ -381,30 +382,6 @@ class OngTsdbSpark:
             )
         )
         self.write_spark_df(db, sensor, wide, fill_value=fill_value, key=key)
-
-    def _write_partitions(self) -> int:
-        """Shuffle width for the chunked write path: the cluster's
-        defaultParallelism (scale-adaptive — grows with the cluster,
-        no local[32]-only constant), overridable via
-        ``spark.ong.write.partitions`` for deployments that want
-        bigger write tasks.  Explicit on purpose: see the
-        AQE-coalescing note in :meth:`write_spark_df`."""
-        conf = self.spark.conf.get("spark.ong.write.partitions", None)
-        if conf:
-            # validate loudly (ADVICE r14): a deployment-conf typo
-            # should name the knob, not die in an int() traceback, and
-            # "0"/negative must not silently clamp to a serial write
-            try:
-                n = int(conf)
-            except (TypeError, ValueError):
-                n = 0
-            if n < 1:
-                raise ValueError(
-                    "spark.ong.write.partitions must be a positive "
-                    f"integer, got {conf!r}"
-                )
-            return n
-        return max(1, self.spark.sparkContext.defaultParallelism)
 
     def write_spark_df(
         self,
@@ -463,116 +440,88 @@ class OngTsdbSpark:
                 val_cols.append(F.when(~F.isnan(c) & c.isNotNull(), c).alias(m))
             norm = norm.select(TS_COL, PART_COL, "_arrival", *val_cols)
 
-            # SINGLE shuffle: repartition by chunk, then the last-wins
-            # groupBy over (chunk, ts) reuses that partitioning
-            # (HashPartitioning on a key subset satisfies the agg's
-            # ClusteredDistribution), and the final partitionBy write
-            # needs no further exchange — each chunk is one task.
-            #
-            # The partition COUNT is explicit (optimization r14, guide
-            # §2.2/§6): a bare repartition(col) is advisory, so AQE
-            # coalesced the small-batch shuffle to ONE task which then
-            # opened/wrote/closed every chunk's parquet file serially —
-            # 3.4 s -> 1.1 s for a 159-chunk ingest at sf0.1.  An
-            # explicit count pins write parallelism to the cluster
-            # width (scale-adaptive via defaultParallelism, not a
-            # constant); each chunk still hashes to exactly one task,
-            # so the one-file-per-chunk-dir layout is unchanged.
-            norm = norm.repartition(self._write_partitions(), PART_COL)
-
-            # last non-null wins per (ts, metric) within the batch
-            aggs = [
-                F.expr(
-                    f"max_by({_q(m)}, CASE WHEN {_q(m)} IS NOT NULL THEN _arrival END)"
-                ).alias(m)
-                for m in in_metrics
-            ]
-            batch = norm.groupBy(PART_COL, TS_COL).agg(*aggs)
-
+            width = max(1, self.spark.sparkContext.defaultParallelism)
             existing = self._read_raw(db, sensor, cfg)
-            if existing is not None:
-                # materialize the snapped/folded batch ONCE: both the
-                # touched-partition census and the merge read it, and
-                # without this the whole snap+shuffle+last-wins agg
-                # pipeline runs twice
-                batch = batch.localCheckpoint(eager=True)
-                touched = [r[0] for r in batch.select(PART_COL).distinct().collect()]
-                old = existing.filter(F.col(PART_COL).isin(touched))
-                merged = self._merge(old, batch, known, cfg)
+            if existing is None:
+                self._fold_and_write(db, sensor, norm, known, width)
             else:
-                merged = batch
-
-            # storage shape: every known metric present; cell empty -> NaN
-            # (row exists + NaN cell == reference's scatter semantics)
-            out_cols = [F.col(TS_COL)]
-            for m in known:
-                if m in merged.columns:
-                    c = F.coalesce(F.col(_q(m)).cast("float"), F.lit(float("nan")).cast("float"))
-                else:
-                    c = F.lit(float("nan")).cast("float")
-                out_cols.append(c.alias(m))
-            out = merged.select(*out_cols, F.col(PART_COL))
-            if existing is not None:
-                # merge join may have re-clustered; re-bucket per chunk
-                # so each partition dir is written by one task (explicit
-                # count for the same AQE-coalescing reason as above).
-                # Width is BOUNDED BY THE WORK (optimization r15,
-                # VERDICT r14 #1): a small upsert touches few chunks,
-                # and a full cluster-width shuffle of it is pure
-                # per-task + parquet-writer-init overhead (the driver's
-                # cold lap measured the 10% upsert 0.67x vs AQE) — the
-                # merge path already knows the touched chunk set, and
-                # one task per touched chunk is the maximum useful
-                # parallelism for a one-file-per-chunk-dir layout.
-                out = out.repartition(
-                    min(self._write_partitions(), max(1, len(touched))),
-                    PART_COL,
-                )
-
-            # per-write dynamic overwrite: only touched chunk_start
-            # dirs are replaced, and the session-global conf (which
-            # would change unrelated writes' semantics) stays untouched
-            (
-                out.sortWithinPartitions(TS_COL)
-                .write.mode("overwrite")
-                .partitionBy(PART_COL)
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", "zstd")
-                .parquet(self.catalog.data_path(db, sensor))
-            )
+                # the batch is read twice (touched-chunk census, then the
+                # fold): persist it so snap + arrival ids run once; a lost
+                # block is recomputed from lineage, not fatal
+                norm = norm.persist()
+                try:
+                    touched = [r[0] for r in norm.select(PART_COL).distinct().collect()]
+                    # stored rows of the touched chunks enter the fold as
+                    # the OLDEST arrival, so any batch value beats them.
+                    # A stored NULL means the chunk predates the metric ->
+                    # its fill value (add_new_metrics, database.py:366-423);
+                    # a stored NaN is an empty cell -> NULL, never a winner
+                    stored_cols = []
+                    for m in known:
+                        c = F.col(_q(m))
+                        fill = cfg.fills.get(m)
+                        if fill is not None and not _is_nan(fill):
+                            c = F.coalesce(c, F.lit(fill).cast("float"))
+                        stored_cols.append(F.when(~F.isnan(c), c).alias(m))
+                    stored = existing.filter(F.col(PART_COL).isin(touched)).select(
+                        TS_COL, PART_COL, F.lit(-1).cast("long").alias("_arrival"), *stored_cols
+                    )
+                    rows = stored.unionByName(norm, allowMissingColumns=True)
+                    # one task per touched chunk is the most a
+                    # one-file-per-chunk-dir layout can use
+                    self._fold_and_write(
+                        db, sensor, rows, known, min(width, max(1, len(touched)))
+                    )
+                finally:
+                    norm.unpersist()
 
             self.catalog.bump_version(db, sensor)
 
-    def _merge(
-        self, old: DataFrame, new: DataFrame, known: list[str], cfg: SensorConfig
-    ) -> DataFrame:
-        """Cellwise outer merge: new non-null cell wins, else old cell.
-        Old NULLs (column absent when the partition was written —
-        i.e. pre-schema-growth rows) become the metric's fill value
-        first, so growth fills apply before the overlay, exactly like
-        add_new_metrics' rewrite (database.py:366-423)."""
-        o = old.alias("o")
-        n = new.alias("n")
-        joined = o.join(n, on=[TS_COL], how="full")
-        cols = [F.coalesce(F.col(f"n.{TS_COL}"), F.col(f"o.{TS_COL}")).alias(TS_COL)]
-        row_is_old = F.col(f"o.{TS_COL}").isNotNull()
-        for m in known:
-            oq, nq = f"o.{_q(m)}", f"n.{_q(m)}"
-            old_c = F.col(oq) if m in old.columns else F.lit(None).cast("float")
-            fill = cfg.fills.get(m)
-            if fill is not None and not _is_nan(fill):
-                # NULL in an existing row == row predates the metric
-                old_c = F.when(row_is_old & old_c.isNull(), F.lit(fill).cast("float")).otherwise(
-                    old_c
-                )
-            new_c = F.col(nq) if m in new.columns else F.lit(None).cast("float")
-            # stored NaN means "cell empty": treat as absent in the overlay
-            old_clean = F.when(~F.isnan(old_c) & old_c.isNotNull(), old_c)
-            cols.append(F.coalesce(new_c, old_clean).alias(m))
-        cols.append(
-            F.coalesce(F.col(f"n.{PART_COL}"), F.col(f"o.{PART_COL}")).alias(PART_COL)
+    def _fold_and_write(
+        self, db: str, sensor: str, rows: DataFrame, known: list[str], width: int
+    ) -> None:
+        """Last non-null wins per (chunk, ts, metric) by ``_arrival``,
+        then a dynamic overwrite of the chunks present in ``rows``.
+
+        SINGLE shuffle: repartition by chunk, then the groupBy over
+        (chunk, ts) reuses that partitioning (HashPartitioning on a key
+        subset satisfies the agg's ClusteredDistribution), and the
+        partitionBy write needs no further exchange — each chunk is one
+        task, so each chunk dir gets exactly one file.  The partition
+        COUNT is explicit: a bare repartition(col) is advisory, and AQE
+        coalesces a small batch's shuffle to ONE task that then writes
+        every chunk's file serially."""
+        rows = rows.repartition(width, PART_COL)
+        present = [m for m in known if m in rows.columns]
+        folded = rows.groupBy(PART_COL, TS_COL).agg(
+            *[
+                F.expr(
+                    f"max_by({_q(m)}, CASE WHEN {_q(m)} IS NOT NULL THEN _arrival END)"
+                ).alias(m)
+                for m in present
+            ]
         )
-        return joined.select(*cols)
+        # storage shape: every known metric present; cell empty -> NaN
+        # (row exists + NaN cell == reference's scatter semantics)
+        nan = F.lit(float("nan")).cast("float")
+        out = folded.select(
+            TS_COL,
+            *[(F.coalesce(F.col(_q(m)), nan) if m in present else nan).alias(m) for m in known],
+            PART_COL,
+        )
+        # per-write dynamic overwrite: only touched chunk_start dirs are
+        # replaced, and the session-global conf (which would change
+        # unrelated writes' semantics) stays untouched.  The local sort
+        # leads with chunk_start: a planned partitionBy write requires
+        # that ordering and drops a sort that does not start with it
+        (
+            out.sortWithinPartitions(PART_COL, TS_COL)
+            .write.mode("overwrite")
+            .partitionBy(PART_COL)
+            .option("partitionOverwriteMode", "dynamic")
+            .option("compression", "zstd")
+            .parquet(self.catalog.data_path(db, sensor))
+        )
 
     # ------------------------------------------------------------------
     # read path (S3/S4, P1-P5)

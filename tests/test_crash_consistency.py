@@ -175,7 +175,7 @@ def test_untouched_chunk_files_never_rewritten(eng):
 
 
 def test_killed_merge_while_other_sensor_writes(spark, tmp_path):
-    """VERDICT r10 #7: kill one writer mid-``_merge`` while a second
+    """Kill one writer mid-merge while a second
     writer holds a DIFFERENT sensor of the same database — both
     sensors must verify clean afterward.  Locks are per-sensor
     (reference test_database.py:141-207 runs its writers against one
@@ -209,24 +209,24 @@ def test_killed_merge_while_other_sensor_writes(spark, tmp_path):
         finally:
             b_done.set()
 
-    # kill A mid-_merge: the real merge runs (we are INSIDE the
-    # sensor-a locks, mid-upsert), then the process "dies" — but only
-    # after writer B has fully written sensor b under A's held lock,
-    # pinning the per-sensor lock scope deterministically
-    real_merge = ea._merge
+    # kill A mid-merge: the stored-row scan resolves (we are INSIDE
+    # the sensor-a locks, mid-upsert), then the process "dies" — but
+    # only after writer B has fully written sensor b under A's held
+    # lock, pinning the per-sensor lock scope deterministically
+    real_read_raw = ea._read_raw
 
-    def dying_merge(old, batch, known, cfg):
-        merged = real_merge(old, batch, known, cfg)
+    def dying_read_raw(db, sensor, cfg):
+        existing = real_read_raw(db, sensor, cfg)
         t = threading.Thread(target=writer_b)
         t.start()
         assert b_done.wait(timeout=120), "writer B deadlocked behind sensor-a lock"
         t.join()
         raise OSError("simulated kill mid-merge")
 
-    ea._merge = dying_merge
+    ea._read_raw = dying_read_raw
     with pytest.raises(OSError, match="simulated kill mid-merge"):
         ea.write_df("test", "sa", pdf_a + 1.0)
-    ea._merge = real_merge
+    ea._read_raw = real_read_raw
 
     # B's write landed while A was mid-merge
     assert not b_err, b_err

@@ -53,8 +53,7 @@ def test_write_layout_one_file_per_chunk_dir(eng):
     advisory repartition(chunk_start) that AQE coalesced to one
     serial writer task) must preserve the storage contract: each
     chunk_start partition dir holds exactly ONE data file, on both
-    the fresh-write and the merge (upsert) path, and the
-    spark.ong.write.partitions override is honored."""
+    the fresh-write and the merge (upsert) path."""
     import os
 
     eng.create_sensor("test", "slay", "1s", ["active", "reactive"])
@@ -77,38 +76,74 @@ def test_write_layout_one_file_per_chunk_dir(eng):
     assert len(fresh) > 1  # genuinely multi-chunk
     assert set(fresh.values()) == {1}, fresh
 
-    # upsert path (existing != None -> second repartition site)
+    # upsert path (stored rows enter the fold)
     eng.write_df("test", "slay", pdf.iloc[:60])
     merged = files_per_chunk()
     assert set(merged.values()) == {1}, merged
     assert eng.read_pandas("test", "slay").equals(pdf.astype("float32"))
 
-    # the deployment override still yields the same layout
-    eng.spark.conf.set("spark.ong.write.partitions", "3")
-    try:
-        assert eng._write_partitions() == 3
-        eng.write_df("test", "slay", pdf.iloc[60:120])
-        over = files_per_chunk()
-        assert set(over.values()) == {1}, over
-    finally:
-        eng.spark.conf.unset("spark.ong.write.partitions")
-    assert eng.read_pandas("test", "slay").equals(pdf.astype("float32"))
+
+def test_written_files_sorted_by_ts(eng):
+    """Every chunk file stores ts_sec strictly increasing, after a
+    fresh write of shuffled rows and after a mid-chunk upsert.  The
+    partitionBy write requires a chunk_start ordering and replaces a
+    local sort that does not lead with it, so the write must sort by
+    (chunk_start, ts_sec)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    eng.create_sensor("test", "ssort", "1s", ["a"])
+    # 3 chunks x 4096 rows
+    idx = pd.date_range("2023-01-02", periods=3 * 4096, freq="4s", tz="UTC")
+    pdf = pd.DataFrame({"a": np.arange(len(idx), dtype="float64")}, index=idx)
+    pdf = pdf.sample(frac=1.0, random_state=7)
+    eng.write_df("test", "ssort", pdf)
+    eng.write_df("test", "ssort", pdf.sort_index().iloc[5000:5100] + 1.0)
+
+    files = glob.glob(os.path.join(
+        eng.catalog.data_path("test", "ssort"), "chunk_start=*", "part-*.parquet"))
+    assert len(files) >= 3
+    for f in files:
+        ts = pq.read_table(f, columns=["ts_sec"]).column("ts_sec").to_numpy()
+        assert len(ts) > 0 and (np.diff(ts) > 0).all(), f
+    out = eng.read_pandas("test", "ssort")
+    expect = pdf.sort_index().astype("float32")
+    expect.iloc[5000:5100] += 1.0
+    assert out.equals(expect)
 
 
-def test_write_partitions_conf_validated(eng):
-    """ADVICE r14: a typo'd or non-positive spark.ong.write.partitions
-    must fail with an error that NAMES the knob, not an opaque int()
-    traceback — and "0" must not silently clamp to a serial write."""
-    import pytest
+def test_upsert_releases_persisted_batch(eng, monkeypatch):
+    """The upsert persists its normalized batch for the touched-chunk
+    census and the fold; it must unpersist it after a commit AND after
+    a failed write, and a failed write must release the sensor lock."""
+    from pyspark.sql import DataFrameWriter
 
-    for bad in ("whoops", "0", "-4", "1.5"):
-        eng.spark.conf.set("spark.ong.write.partitions", bad)
-        try:
-            with pytest.raises(ValueError, match="spark.ong.write.partitions"):
-                eng._write_partitions()
-        finally:
-            eng.spark.conf.unset("spark.ong.write.partitions")
-    assert eng._write_partitions() >= 1
+    jsc = eng.spark.sparkContext._jsc
+    eng.create_sensor("test", "spers", "1h", ["a"])
+    pdf = _mk_pdf(10, metrics=("a",))
+    eng.write_df("test", "spers", pdf)
+
+    before = jsc.getPersistentRDDs().size()
+    eng.write_df("test", "spers", pdf.iloc[:3] + 1.0)
+    assert jsc.getPersistentRDDs().size() == before
+
+    def broken_parquet(self, *args, **kwargs):
+        raise OSError("simulated write failure")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", broken_parquet)
+        with pytest.raises(OSError, match="simulated write failure"):
+            eng.write_df("test", "spers", pdf.iloc[:3] + 2.0)
+    assert jsc.getPersistentRDDs().size() == before
+    assert not eng._sensor_lock("test", "spers").locked()
+
+    # the lock file was released too: the next write commits
+    eng.write_df("test", "spers", pdf.iloc[:3] + 3.0)
+    expect = pdf.astype("float32")
+    expect.iloc[:3] += 3.0
+    assert eng.read_pandas("test", "spers").equals(expect)
 
 
 def test_scan_memo_invalidated_on_write(eng):
