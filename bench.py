@@ -653,6 +653,7 @@ def bench_engine(spark, sf_dir: str, serve_steady: int = 0) -> dict[str, float]:
             f"({n100 / out['engine_ingest_100x']:,.0f} rows/s)",
             file=sys.stderr,
         )
+        release_blocks(spark)  # free the 10M-row checkpoint before ticks300
         # SCALING-SIGNAL row, revision 2 (still r15, additive — the 100x
         # row above stays per the additions-only contract).  Measured
         # same-day interleaved fresh-JVM laps showed the single-shot

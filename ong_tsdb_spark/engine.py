@@ -29,10 +29,12 @@ overlapping partitions, an upsert rewrites only touched partitions
 
 from __future__ import annotations
 
+import contextlib
 import math
 import threading
 from typing import Any, Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -261,14 +263,12 @@ class OngTsdbSpark:
     ) -> None:
         """Write a pandas frame (DatetimeIndex x metric columns) —
         parity with client.write_df (client.py:372-382)."""
+        from .auth import Action
+
         ts_sec, values, names = pdf_to_records(pdf)
-        rows = [(t, *v) for t, v in zip(ts_sec, values)]
-        schema = T.StructType(
-            [T.StructField(TS_COL, T.DoubleType())]
-            + [T.StructField(n, T.DoubleType()) for n in names]
-        )
-        sdf = self.spark.createDataFrame(rows, schema)
-        self.write_spark_df(db, sensor, sdf, fill_value=fill_value, key=key)
+        self._auth(Action.WRITE, db=db, sensor=sensor, key=key)
+        grid = self.catalog.get_config(db, sensor).grid
+        self._upsert(db, sensor, *self._driver_batch(grid, ts_sec, values, names), fill_value)
 
     def write_points(
         self,
@@ -279,19 +279,27 @@ class OngTsdbSpark:
         key: str | None = None,
     ) -> None:
         """Write (metric, value, ts_sec) long-form tuples — the influx
-        ingest shape after parsing (server.py:214-293). Scatters into a
-        wide frame; metric order per-point is irrelevant, partial rows
-        merge cellwise (tests/test_client.py:65-70)."""
+        ingest shape after parsing (server.py:214-293).  Each point is
+        one sparse row carrying only its own metric; the upsert's fold
+        then resolves every cell last-non-NaN-wins in point order, so
+        metric order per-point is irrelevant and partial rows merge
+        cellwise (tests/test_client.py:65-70).  A point with an empty
+        metric name still makes its row exist (all NaN)."""
+        from .auth import Action
+
         long_rows = [(str(m), float(v), float(t)) for m, v, t in points]
-        schema = T.StructType(
-            [
-                T.StructField("metric", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField(TS_COL, T.DoubleType()),
-            ]
-        )
-        sdf = self.spark.createDataFrame(long_rows, schema)
-        self.write_long_df(db, sensor, sdf, fill_value=fill_value, key=key)
+        names = sorted({m for m, _, _ in long_rows if m})
+        if not names:
+            return
+        grid = self.catalog.get_config(db, sensor).grid
+        self._auth(Action.WRITE, db=db, sensor=sensor, key=key)
+        col = {m: i for i, m in enumerate(names)}
+        values = np.full((len(long_rows), len(names)), np.nan)
+        for i, (m, v, _) in enumerate(long_rows):
+            if m:
+                values[i, col[m]] = v
+        ts_sec = np.array([t for _, _, t in long_rows], dtype=np.float64)
+        self._upsert(db, sensor, *self._driver_batch(grid, ts_sec, values, names), fill_value)
 
     def write_points_multi(
         self,
@@ -356,30 +364,20 @@ class OngTsdbSpark:
         key: str | None = None,
     ) -> None:
         """Distributed long-form upsert: a (metric, value, ts_sec)
-        DataFrame of any size (e.g. a streaming micro-batch) is pivoted
-        to wide *inside Spark* — the only driver-side data is the
-        distinct metric-name list (bounded by schema width, not rows).
-
-        The pivot groups by the *snapped* timestamp: two off-grid
-        points landing in one grid cell must resolve last-non-NaN-wins
-        HERE, while ``_arrival`` still reflects input order (assigning
-        arrival ids after the pivot would order by shuffle output —
-        arbitrary; this was a real bug caught by the model-based test).
-        NaN values are excluded from the arrival race entirely (a NaN
-        input never overwrites, database.py:480-483)."""
+        DataFrame of any size (e.g. a streaming micro-batch) becomes
+        sparse wide rows *inside Spark*, one per input row with only
+        its own metric set — the only driver-side data is the distinct
+        metric-name list (bounded by schema width, not rows).  The
+        upsert's fold resolves duplicate cells last-non-NaN-wins in
+        input order, exactly as :meth:`write_points` does."""
         names = sorted(
             r[0] for r in long_df.select("metric").distinct().collect() if r[0]
         )
         if not names:
             return
-        grid = self.catalog.get_config(db, sensor).grid
-        sdf = long_df.withColumn("_arrival", F.monotonically_increasing_id())
-        sdf = sdf.withColumn(TS_COL, grid.snap_expr(F.col(TS_COL)).cast("double"))
-        wide = sdf.groupBy(TS_COL).pivot("metric", names).agg(
-            F.expr(
-                "max_by(value, CASE WHEN value IS NOT NULL AND NOT isnan(value) "
-                "THEN _arrival END)"
-            )
+        self.catalog.get_config(db, sensor)  # unknown sensor: raise before auth
+        wide = long_df.select(
+            TS_COL, *[F.when(F.col("metric") == m, F.col("value")).alias(m) for m in names]
         )
         self.write_spark_df(db, sensor, wide, fill_value=fill_value, key=key)
 
@@ -391,30 +389,87 @@ class OngTsdbSpark:
         fill_value: float = 0.0,
         key: str | None = None,
     ) -> None:
-        """The core M1 upsert. ``sdf`` columns: ``ts_sec`` (double epoch
-        seconds) or ``ts`` (timestamp), plus one numeric column per
-        metric.  Cell rule (database.py:479-486): a non-NaN input value
-        overwrites the stored cell; NaN/absent inputs leave it alone.
-        """
+        """The distributed M1 upsert. ``sdf`` columns: ``ts_sec`` (double
+        epoch seconds) or ``ts`` (timestamp), plus one numeric column
+        per metric.  Cell rule (database.py:479-486): a non-NaN input
+        value overwrites the stored cell; NaN/absent inputs leave it
+        alone.  The batch is normalized in Spark, then enters
+        :meth:`_upsert`, which counts its touched chunks with one census
+        job when the sensor has stored chunks."""
         from .auth import Action
 
         self._auth(Action.WRITE, db=db, sensor=sensor, key=key)
-        if not self.catalog.exist_sensor(db, sensor):
-            self.catalog.get_config(db, sensor)  # raises ElementNotFoundError
+        grid = self.catalog.get_config(db, sensor).grid
 
         if TS_COL not in sdf.columns:
             if "ts" not in sdf.columns:
                 raise ValueError("input needs a ts_sec (epoch sec) or ts (timestamp) column")
             sdf = sdf.withColumn(TS_COL, F.col("ts").cast("double")).drop("ts")
 
-        in_metrics = [c for c in sdf.columns if c != TS_COL]
+        # normalize: snap to grid, float32 values, NaN -> NULL so
+        # "no value supplied" is uniform for the last-wins fold
+        snapped = grid.snap_expr(F.col(TS_COL)).cast("double")
+        norm = sdf.withColumn(TS_COL, snapped).withColumn(
+            "_arrival", F.monotonically_increasing_id()
+        )
+        norm = norm.withColumn(PART_COL, grid.chunk_start_expr(F.col(TS_COL)))
+        val_cols = []
+        for m in sdf.columns:
+            if m == TS_COL:
+                continue
+            c = F.col(_q(m)).cast("float")
+            val_cols.append(F.when(~F.isnan(c) & c.isNotNull(), c).alias(m))
+        norm = norm.select(TS_COL, PART_COL, "_arrival", *val_cols)
+        self._upsert(db, sensor, norm, None, fill_value)
 
-        lock = self._sensor_lock(db, sensor)
-        with lock, self._file_lock(db, sensor):
+    def _driver_batch(
+        self, grid: Grid, ts_sec: np.ndarray, values: np.ndarray, names: list[str]
+    ) -> tuple[DataFrame, list]:
+        """Normalize a driver-resident batch with numpy — the same snap,
+        ``chunk_start``, arrival order (the input row index), float32
+        cast and NaN -> NULL as :meth:`write_spark_df` does in Spark —
+        and return it as one DataFrame with its touched chunk set, so
+        no census job is needed."""
+        ts = grid.snap_array(ts_sec).astype(np.float64)
+        part = grid.chunk_start_array(ts)
+        vals = np.asarray(values, dtype=np.float32)
+        cells = vals.astype(object)
+        cells[np.isnan(vals)] = None
+        rows = [
+            (t, p, i, *v)
+            for i, (t, p, v) in enumerate(zip(ts.tolist(), part.tolist(), cells.tolist()))
+        ]
+        part_t = T.LongType() if part.dtype == np.int64 else T.DoubleType()
+        schema = T.StructType(
+            [
+                T.StructField(TS_COL, T.DoubleType()),
+                T.StructField(PART_COL, part_t),
+                T.StructField("_arrival", T.LongType()),
+            ]
+            + [T.StructField(n, T.FloatType()) for n in names]
+        )
+        return self.spark.createDataFrame(rows, schema), np.unique(part).tolist()
+
+    def _upsert(
+        self, db: str, sensor: str, norm: DataFrame, touched: list | None, fill_value: float
+    ) -> None:
+        """The locked core every write enters.  ``norm`` is a normalized
+        batch (snapped ``ts_sec``, ``chunk_start``, ``_arrival``, one
+        float column per input metric with NULL for "no value");
+        ``touched`` is its distinct ``chunk_start`` values, or None when
+        they are unknown (a batch still in Spark).  Under both locks:
+        append-only schema growth, one driver listing of the chunk
+        dirs, the stored rows of the touched dirs only, one last-wins
+        fold, version bump."""
+        in_metrics = [c for c in norm.columns if c not in (TS_COL, PART_COL, "_arrival")]
+        with (
+            self._sensor_lock(db, sensor),
+            self._file_lock(db, sensor),
+            contextlib.ExitStack() as cleanup,
+        ):
             # config is (re-)read INSIDE the locks: another process may
             # have grown the schema since our last look
             cfg = self.catalog.get_config(db, sensor)
-            grid = cfg.grid
             known = flatten_metrics(cfg.metrics)
             # M2: append-only schema growth + per-metric fill bookkeeping
             new_metrics = [m for m in in_metrics if m not in known]
@@ -427,55 +482,60 @@ class OngTsdbSpark:
                 self.catalog.update_config(db, sensor, cfg)
                 known = flatten_metrics(cfg.metrics)
 
-            # normalize: snap to grid, float32 values, NaN -> NULL so
-            # "no value supplied" is uniform for the last-wins fold
-            snapped = grid.snap_expr(F.col(TS_COL)).cast("double")
-            norm = sdf.withColumn(TS_COL, snapped).withColumn(
-                "_arrival", F.monotonically_increasing_id()
-            )
-            norm = norm.withColumn(PART_COL, grid.chunk_start_expr(F.col(TS_COL)))
-            val_cols = []
-            for m in in_metrics:
-                c = F.col(_q(m)).cast("float")
-                val_cols.append(F.when(~F.isnan(c) & c.isNotNull(), c).alias(m))
-            norm = norm.select(TS_COL, PART_COL, "_arrival", *val_cols)
-
-            width = max(1, self.spark.sparkContext.defaultParallelism)
-            existing = self._read_raw(db, sensor, cfg)
-            if existing is None:
-                self._fold_and_write(db, sensor, norm, known, width)
-            else:
-                # the batch is read twice (touched-chunk census, then the
-                # fold): persist it so snap + arrival ids run once; a lost
+            # a listing failure raises: treating it as "no stored rows"
+            # would let the dynamic overwrite replace the touched chunks
+            # with the batch alone (code-review r9)
+            chunk_dirs = self._chunk_dirs(db, sensor)
+            if chunk_dirs and touched is None:
+                # a Spark batch is then read twice (census, then fold):
+                # persist it so snap + arrival ids run once; a lost
                 # block is recomputed from lineage, not fatal
                 norm = norm.persist()
-                try:
-                    touched = [r[0] for r in norm.select(PART_COL).distinct().collect()]
-                    # stored rows of the touched chunks enter the fold as
-                    # the OLDEST arrival, so any batch value beats them.
-                    # A stored NULL means the chunk predates the metric ->
-                    # its fill value (add_new_metrics, database.py:366-423);
-                    # a stored NaN is an empty cell -> NULL, never a winner
-                    stored_cols = []
-                    for m in known:
-                        c = F.col(_q(m))
-                        fill = cfg.fills.get(m)
-                        if fill is not None and not _is_nan(fill):
-                            c = F.coalesce(c, F.lit(fill).cast("float"))
-                        stored_cols.append(F.when(~F.isnan(c), c).alias(m))
-                    stored = existing.filter(F.col(PART_COL).isin(touched)).select(
-                        TS_COL, PART_COL, F.lit(-1).cast("long").alias("_arrival"), *stored_cols
-                    )
-                    rows = stored.unionByName(norm, allowMissingColumns=True)
-                    # one task per touched chunk is the most a
-                    # one-file-per-chunk-dir layout can use
-                    self._fold_and_write(
-                        db, sensor, rows, known, min(width, max(1, len(touched)))
-                    )
-                finally:
-                    norm.unpersist()
-
+                cleanup.callback(norm.unpersist)
+                touched = [r[0] for r in norm.select(PART_COL).distinct().collect()]
+            want = set(touched or ())
+            rows = norm
+            stored = self._read_stored(db, sensor, cfg, [e for v, e in chunk_dirs if v in want])
+            if stored is not None:
+                # stored rows enter the fold as the OLDEST arrival, so
+                # any batch value beats them.  A stored NULL means the
+                # chunk predates the metric -> its fill value
+                # (add_new_metrics, database.py:366-423); a stored NaN
+                # is an empty cell -> NULL, never a winner
+                stored_cols = []
+                for m in known:
+                    c = F.col(_q(m))
+                    fill = cfg.fills.get(m)
+                    if fill is not None and not _is_nan(fill):
+                        c = F.coalesce(c, F.lit(fill).cast("float"))
+                    stored_cols.append(F.when(~F.isnan(c), c).alias(m))
+                stored = stored.select(
+                    TS_COL, PART_COL, F.lit(-1).cast("long").alias("_arrival"), *stored_cols
+                )
+                rows = stored.unionByName(norm, allowMissingColumns=True)
+            # one task per touched chunk is the most a one-file-per-
+            # chunk-dir layout can use
+            width = max(1, self.spark.sparkContext.defaultParallelism)
+            if touched is not None:
+                width = min(width, max(1, len(touched)))
+            self._fold_and_write(db, sensor, rows, known, width)
             self.catalog.bump_version(db, sensor)
+
+    def _read_stored(
+        self, db: str, sensor: str, cfg: SensorConfig, dirs: list[str]
+    ) -> DataFrame | None:
+        """The stored rows of the given chunk dirs (names as listed);
+        None for no dirs.  Spark reads just those dirs, so the cost
+        follows the batch, not the sensor's history.  A read failure
+        raises, never "no stored rows"."""
+        if not dirs:
+            return None
+        base = self.catalog.data_path(db, sensor)
+        return (
+            self.spark.read.schema(self._storage_schema(cfg))
+            .option("basePath", base)
+            .parquet(*[f"{base}/{e}" for e in dirs])
+        )
 
     def _fold_and_write(
         self, db: str, sensor: str, rows: DataFrame, known: list[str], width: int
@@ -526,6 +586,19 @@ class OngTsdbSpark:
     # ------------------------------------------------------------------
     # read path (S3/S4, P1-P5)
     # ------------------------------------------------------------------
+    @staticmethod
+    def _storage_schema(cfg: SensorConfig) -> T.StructType:
+        """The sensor's exact storage shape, from the catalog: ts double,
+        every known metric float, chunk_start long (double only for
+        fractional sub-second grids)."""
+        d = cfg.grid.chunk_duration
+        part_t = T.LongType() if d == int(d) else T.DoubleType()
+        return T.StructType(
+            [T.StructField(TS_COL, T.DoubleType())]
+            + [T.StructField(m, T.FloatType()) for m in flatten_metrics(cfg.metrics)]
+            + [T.StructField(PART_COL, part_t)]
+        )
+
     def _read_raw(self, db: str, sensor: str, cfg: SensorConfig) -> DataFrame | None:
         """Scan the sensor dataset; None if empty.
 
@@ -554,13 +627,7 @@ class OngTsdbSpark:
         cheap mtime fingerprint there."""
         if not self.catalog.data_exists(db, sensor):
             return None
-        d = cfg.grid.chunk_duration
-        part_t = T.LongType() if d == int(d) else T.DoubleType()
-        schema = T.StructType(
-            [T.StructField(TS_COL, T.DoubleType())]
-            + [T.StructField(m, T.FloatType()) for m in flatten_metrics(cfg.metrics)]
-            + [T.StructField(PART_COL, part_t)]
-        )
+        schema = self._storage_schema(cfg)
         memo_key = None
         local = self._local_data_dir(db, sensor)
         if local is not None:
@@ -587,12 +654,10 @@ class OngTsdbSpark:
             return df
         except AnalysisException as ex:
             # ONLY a vanished path (raced a concurrent delete) is
-            # "no data".  Anything else must RAISE: write_spark_df
-            # interprets None as "sensor empty" and skips the cellwise
-            # merge, so masking a transient listing/permission failure
-            # here would let a dynamic partition overwrite silently
-            # replace existing chunks with the new batch alone —
-            # irreversible data loss on a read blip (code-review r9).
+            # "no data".  Anything else must RAISE: callers read None
+            # as "sensor empty" (compaction then rewrites nothing), so
+            # a transient listing/permission failure must not look
+            # like one (code-review r9).
             if _is_path_not_found(ex):
                 return None
             raise
@@ -767,15 +832,7 @@ class OngTsdbSpark:
             return None
         self._auth(Action.READ, db=db, sensor=sensor, key=key)
         grid = cfg.grid
-        parts = []
-        for entry in self.catalog.list_data_partitions(db, sensor):
-            if not entry.startswith(f"{PART_COL}="):
-                continue
-            try:
-                v = float(entry.split("=", 1)[1])
-            except ValueError:
-                continue
-            parts.append((v, entry))
+        parts = self._chunk_dirs(db, sensor)
         start = grid.snap(float(start_ts)) if start_ts is not None else None
         if start is not None:
             parts = [(v, e) for v, e in parts if v >= grid.chunk_start(start)]
@@ -967,17 +1024,23 @@ class OngTsdbSpark:
             if len(pdf):
                 yield c, pdf
 
-    def _existing_chunks(self, db: str, sensor: str) -> list[float]:
-        """Chunk-start values present on disk — a partition-directory
-        listing (metadata-only, no data scan)."""
+    def _chunk_dirs(self, db: str, sensor: str) -> list[tuple[float, str]]:
+        """``(chunk_start, dir name)`` of every chunk dir on disk — a
+        partition-directory listing (metadata-only, no data scan).
+        Values are parsed from the names, which Java may write as
+        ``1.7E9``; unparseable names are skipped."""
         out = []
         for entry in self.catalog.list_data_partitions(db, sensor):
             if entry.startswith(f"{PART_COL}="):
                 try:
-                    out.append(float(entry.split("=", 1)[1]))
+                    out.append((float(entry.split("=", 1)[1]), entry))
                 except ValueError:
                     pass
         return out
+
+    def _existing_chunks(self, db: str, sensor: str) -> list[float]:
+        """Chunk-start values present on disk."""
+        return [v for v, _ in self._chunk_dirs(db, sensor)]
 
     def read_downsampled(
         self,
@@ -1064,15 +1127,7 @@ class OngTsdbSpark:
 
         self._auth(Action.READ, db=db, sensor=sensor, key=key)
         cfg = self.catalog.get_config(db, sensor)
-        last = None
-        for entry in self.catalog.list_data_partitions(db, sensor):
-            if entry.startswith(f"{PART_COL}="):
-                try:
-                    v = float(entry.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if last is None or v > last[0]:
-                    last = (v, entry)
+        last = max(self._chunk_dirs(db, sensor), default=None)
         if last is None:
             return None
         # serving fast path: parquet row-group STATS of the max chunk's

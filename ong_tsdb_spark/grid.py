@@ -33,6 +33,8 @@ import math
 import re
 from dataclasses import dataclass
 
+import numpy as np
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -162,25 +164,50 @@ class Grid:
         Integer-friendly: when the tick is a whole number of seconds the
         result is exact ``bigint`` math (no float rounding).
         """
-        d = self.chunk_duration
-        if d == int(d):
-            d_i = int(d)
-            return (F.floor(ts_sec / F.lit(d_i)) * F.lit(d_i)).cast("long")
-        return F.floor(ts_sec / F.lit(d)) * F.lit(d)
+        return _floor_to_expr(ts_sec, self.chunk_duration)
 
     def snap_expr(self, ts_sec: Column) -> Column:
         """Snap an epoch-seconds column down to the tick grid."""
-        t = self.tick_seconds
-        if t == int(t):
-            t_i = int(t)
-            return (F.floor(ts_sec / F.lit(t_i)) * F.lit(t_i)).cast("long")
-        return F.floor(ts_sec / F.lit(t)) * F.lit(t)
+        return _floor_to_expr(ts_sec, self.tick_seconds)
 
     def pos_expr(self, ts_sec: Column) -> Column:
         """Row position within the chunk (parity with Chunker.getpos)."""
         return F.floor((ts_sec - self.chunk_start_expr(ts_sec)) / F.lit(self.tick_seconds)).cast(
             "long"
         )
+
+    # -- numpy twins of the *_expr, for driver-resident batches -----
+    def chunk_start_array(self, ts_sec: np.ndarray) -> np.ndarray:
+        """:meth:`chunk_start_expr` over a float64 array, element for
+        element: int64 for a whole-second chunk, float64 otherwise."""
+        return _floor_to_array(ts_sec, self.chunk_duration)
+
+    def snap_array(self, ts_sec: np.ndarray) -> np.ndarray:
+        """:meth:`snap_expr` over a float64 array, element for element."""
+        return _floor_to_array(ts_sec, self.tick_seconds)
+
+
+def _floor_to_expr(x: Column, step: float) -> Column:
+    """``floor(x/step)*step``: Spark's floor of a double is a bigint, so
+    a whole step stays bigint math and a fractional one multiplies that
+    bigint by a double."""
+    if step == int(step):
+        s = int(step)
+        return (F.floor(x / F.lit(s)) * F.lit(s)).cast("long")
+    return F.floor(x / F.lit(step)) * F.lit(step)
+
+
+def _floor_to_array(x: np.ndarray, step: float) -> np.ndarray:
+    """:func:`_floor_to_expr` in numpy, the same operations in the same
+    types.  Java's double -> long cast maps NaN to 0, so a NaN snaps to
+    0 here too.  Near the long range Spark's bigint product overflows
+    (an error under ANSI) or saturates; such a timestamp is rejected."""
+    x = np.asarray(x, dtype=np.float64)
+    x = np.where(np.isnan(x), 0.0, x)
+    if (np.abs(x) >= 2.0**62).any():
+        raise ValueError("timestamp out of range (|ts| >= 2**62 s)")
+    q = np.floor(x / step).astype(np.int64)
+    return q * int(step) if step == int(step) else q * step
 
 
 def epoch_seconds(ts: Column) -> Column:

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 #: separator for flattened multiindex names; escaped if it appears in a part
@@ -49,17 +50,18 @@ def build_column_index(metrics: list, level_names: list[str] | None) -> pd.Index
     return pd.Index(metrics)
 
 
-def pdf_to_records(pdf: pd.DataFrame) -> tuple[list[float], list[list[float]], list[str]]:
-    """pandas frame (DatetimeIndex x metric columns) -> (epoch_sec rows,
-    value rows, flat metric names). Mirrors client.write_df's
-    df->tuples conversion (client.py:372-382, ns -> s)."""
+def pdf_to_records(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, list[str]]:
+    """pandas frame (DatetimeIndex x metric columns) -> (float64
+    epoch-sec array, float64 rows x metrics value matrix, flat metric
+    names). Mirrors client.write_df's df->tuples conversion
+    (client.py:372-382, ns -> s)."""
     idx = pd.DatetimeIndex(pdf.index)
     if idx.tz is not None:
         idx = idx.tz_convert("UTC").tz_localize(None)
-    ts_sec = (idx.asi8 / 1e9).tolist()
+    ts_sec = idx.asi8 / 1e9
     if isinstance(pdf.columns, pd.MultiIndex):
         names = [flatten_metric(list(c)) for c in pdf.columns]
     else:
         names = [flatten_metric(c) for c in pdf.columns]
-    values = pdf.to_numpy(dtype="float64").tolist()
+    values = pdf.to_numpy(dtype="float64")
     return ts_sec, values, names

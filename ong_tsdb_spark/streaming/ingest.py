@@ -66,6 +66,19 @@ def start_influx_file_stream(
     return writer.start()
 
 
+def with_ts_sec(parsed: DataFrame) -> DataFrame:
+    """Add ``ts_sec`` to parsed lines: ``ts_ns`` in seconds, or the
+    current whole second for a line without a timestamp (server
+    default, server_utils.py:16; processing-time — see the module
+    docstring's replay caveat)."""
+    return parsed.withColumn(
+        TS_COL,
+        F.when(
+            F.col("ts_ns").isNotNull(), F.col("ts_ns").cast("double") / F.lit(1e9)
+        ).otherwise(F.unix_timestamp(F.current_timestamp()).cast("double")),
+    )
+
+
 def upsert_parsed_batch(
     engine: OngTsdbSpark,
     parsed: DataFrame,
@@ -76,18 +89,12 @@ def upsert_parsed_batch(
     refresh_rollups: bool = False,
 ) -> None:
     """Upsert a parsed long-form batch (db, sensor, metric, value,
-    ts_ns).  Missing ts -> current time (server default,
-    server_utils.py:16; processing-time — see the module docstring's
-    replay caveat).  ``key`` is checked per sensor by the upsert
-    (reference: per-sensor write keys, database.py:170-187).
+    ts_ns).  Missing ts -> current time (:func:`with_ts_sec`).
+    ``key`` is checked per sensor by the upsert (reference:
+    per-sensor write keys, database.py:170-187).
     ``refresh_rollups`` incrementally refreshes registered rollups of
     each written sensor over the batch's [min_ts, max_ts] span."""
-    parsed = parsed.withColumn(
-        TS_COL,
-        F.when(
-            F.col("ts_ns").isNotNull(), F.col("ts_ns").cast("double") / F.lit(1e9)
-        ).otherwise(F.unix_timestamp(F.current_timestamp()).cast("double")),
-    )
+    parsed = with_ts_sec(parsed)
     # parse_lines yields EMPTY STRINGS, not nulls, for absent parts
     # (regexp_extract no-match -> ''; split('')[0] -> '') — nullif
     # first or the defaults would be dead and rows would target a
@@ -105,7 +112,7 @@ def upsert_parsed_batch(
     # group by (db, sensor): tiny driver loop over *distinct sensors in
     # this batch* (bounded by catalog size, not data size), exactly the
     # reference's DbMeterData grouping; the per-sensor rows stay in
-    # Spark end-to-end (write_long_df pivots distributedly)
+    # Spark end-to-end (write_long_df widens them distributedly)
     parsed = parsed.persist()
     try:
         # one tiny aggregate gives targets AND their batch time spans

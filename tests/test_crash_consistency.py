@@ -213,20 +213,20 @@ def test_killed_merge_while_other_sensor_writes(spark, tmp_path):
     # the sensor-a locks, mid-upsert), then the process "dies" — but
     # only after writer B has fully written sensor b under A's held
     # lock, pinning the per-sensor lock scope deterministically
-    real_read_raw = ea._read_raw
+    real_read_stored = ea._read_stored
 
-    def dying_read_raw(db, sensor, cfg):
-        existing = real_read_raw(db, sensor, cfg)
+    def dying_read_stored(db, sensor, cfg, dirs):
+        existing = real_read_stored(db, sensor, cfg, dirs)
         t = threading.Thread(target=writer_b)
         t.start()
         assert b_done.wait(timeout=120), "writer B deadlocked behind sensor-a lock"
         t.join()
         raise OSError("simulated kill mid-merge")
 
-    ea._read_raw = dying_read_raw
+    ea._read_stored = dying_read_stored
     with pytest.raises(OSError, match="simulated kill mid-merge"):
         ea.write_df("test", "sa", pdf_a + 1.0)
-    ea._read_raw = real_read_raw
+    ea._read_stored = real_read_stored
 
     # B's write landed while A was mid-merge
     assert not b_err, b_err

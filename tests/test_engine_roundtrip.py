@@ -115,9 +115,9 @@ def test_written_files_sorted_by_ts(eng):
 
 
 def test_upsert_releases_persisted_batch(eng, monkeypatch):
-    """The upsert persists its normalized batch for the touched-chunk
-    census and the fold; it must unpersist it after a commit AND after
-    a failed write, and a failed write must release the sensor lock."""
+    """A write_df upsert leaves no persisted RDD behind after a commit
+    AND after a failed write, and a failed write must release the
+    sensor lock."""
     from pyspark.sql import DataFrameWriter
 
     jsc = eng.spark.sparkContext._jsc
@@ -589,3 +589,89 @@ def test_local_data_dir_resolves_file_uri_forms(spark, tmp_path):
     # triple-slash spelling resolves to the same directory
     eng3 = OngTsdbSpark(spark, f"file://{base}")
     assert eng3._local_data_dir("d", "s") == local
+
+
+def test_upsert_cost_does_not_grow_with_history(eng):
+    """An upsert reads only the chunk dirs its batch touches: growing a
+    sensor from 16 to 40 chunk dirs (past Spark's 32-path parallel
+    listing threshold) must not add a job or tasks.  Two head upserts
+    run back to back with no read between them, so no read-side cache
+    can hide a listing of the whole sensor."""
+    import uuid
+
+    sc = eng.spark.sparkContext
+    tracker = sc.statusTracker()
+    d = 16384  # chunk span of a 1 s grid
+    t0 = pd.Timestamp("2023-01-02", tz="UTC").timestamp() // d * d
+    eng.create_sensor("test", "shist", "1s", ["a"])
+
+    def grow_to(n_chunks):
+        idx = pd.to_datetime(t0 + d * np.arange(n_chunks) + 5, unit="s", utc=True)
+        pdf = pd.DataFrame({"a": np.arange(n_chunks, dtype="float64")}, index=idx)
+        eng.write_df("test", "shist", pdf)
+
+    def head_upsert_cost(n_chunks):
+        head = pd.to_datetime(t0 + d * (n_chunks - 1) + np.arange(3), unit="s", utc=True)
+        pdf = pd.DataFrame({"a": [1.0, 2.0, 3.0]}, index=head)
+        eng.write_df("test", "shist", pdf)
+        group = f"hist-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "second head upsert")
+        try:
+            eng.write_df("test", "shist", pdf + 1.0)
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = 0  # tasks that ran: a skipped stage completes none
+        for j in jobs:
+            for s in tracker.getJobInfo(j).stageIds:
+                info = tracker.getStageInfo(s)
+                tasks += info.numCompletedTasks if info is not None else 0
+        return len(jobs), tasks
+
+    grow_to(16)
+    jobs16, tasks16 = head_upsert_cost(16)
+    grow_to(40)
+    assert len(eng._existing_chunks("test", "shist")) == 40
+    jobs40, tasks40 = head_upsert_cost(40)
+    assert jobs40 == jobs16
+    # one touched chunk: the batch's own slices, the stored chunk's
+    # scan and the fold's one task — nothing per stored chunk dir
+    touched = 1
+    assert tasks40 <= touched + sc.defaultParallelism + 3, (tasks16, tasks40)
+    got = eng.read_pandas("test", "shist")
+    # 40 grown rows plus the two 3-row heads; the last head won over the first
+    assert len(got) == 40 + 2 * 3
+    assert got["a"].iloc[-4:].tolist() == [2.0, 3.0, 4.0, 39.0]
+
+
+def test_spark_upsert_releases_persisted_batch(eng, monkeypatch):
+    """write_spark_df persists its normalized batch for the touched-chunk
+    census and the fold; it must unpersist it after a commit AND after
+    a failed write."""
+    from pyspark.sql import DataFrameWriter
+
+    jsc = eng.spark.sparkContext._jsc
+    eng.create_sensor("test", "sspers", "1h", ["a"])
+    pdf = _mk_pdf(10, metrics=("a",))
+    eng.write_df("test", "sspers", pdf)
+
+    def batch(delta):
+        rows = [(float(t.timestamp()), float(v) + delta) for t, v in pdf["a"].iloc[:3].items()]
+        return eng.spark.createDataFrame(rows, "ts_sec double, a double")
+
+    before = jsc.getPersistentRDDs().size()
+    eng.write_spark_df("test", "sspers", batch(1.0))
+    assert jsc.getPersistentRDDs().size() == before
+
+    def broken_parquet(self, *args, **kwargs):
+        raise OSError("simulated write failure")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", broken_parquet)
+        with pytest.raises(OSError, match="simulated write failure"):
+            eng.write_spark_df("test", "sspers", batch(2.0))
+    assert jsc.getPersistentRDDs().size() == before
+    expect = pdf.astype("float32")
+    expect.iloc[:3] += 1.0
+    assert eng.read_pandas("test", "sspers").equals(expect)

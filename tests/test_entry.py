@@ -133,6 +133,10 @@ def test_bench_scaling_rows_contract():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "bench.py")) as fh:
         src = fh.read()
+    # each anchor must occur exactly once, or a split could pick the
+    # wrong occurrence and pass against an unrelated literal
+    for anchor in ("if k not in (", '"protocols": {'):
+        assert src.count(anchor) == 1, anchor
     excl = src.split("if k not in (")[1].split(")")[0]
     protocols = src.split('"protocols": {')[1].split("},")[0]
     for row in ("engine_ingest_100x", "engine_ingest_300x"):

@@ -421,3 +421,67 @@ def test_proxy_malformed_bodies_no_500():
 
     with _pytest.raises(ProxyNotAuthorizedError, match="login url"):
         negotiate_proxy_auth(challenge_without_url, {"username": "u"})
+
+
+def test_influx_edge_semantics(client):
+    """/influx edge cases: an empty metric name (``=7``) is ignored, but
+    a line with any field still makes its row exist; a non-numeric
+    value (``m0=abc``) names the metric (schema growth) and writes no
+    cell; a line without a timestamp lands at the current second; a
+    body spanning two sensors writes both; an unknown sensor is a 404
+    and the body's other sensors are still written."""
+    import time
+
+    hdr = _auth("admintoken")
+    client.post("/db/b", headers=hdr)
+    for s in ("s1", "s2"):
+        client.post(f"/db/b/sensor/{s}", json={"period": "1s", "metrics": ["m0"]}, headers=hdr)
+    t0 = 1672617600
+
+    def rows(sensor):
+        got = client.post(
+            f"/b/{sensor}/read_df", json={"start_ts": 0, "format": "json"}, headers=hdr
+        ).get_json()
+        return got["metrics"], dict(zip(got["dates"], got["values"]))
+
+    # only an empty metric name: nothing to write
+    r = client.post("/influx", data=f"b,key=s1 =7 {t0 * 10**9}", headers=hdr)
+    assert r.status_code == 200
+    assert client.post("/b/s1/read_df", json={"start_ts": 0}, headers=hdr).status_code == 404
+
+    body = "\n".join(
+        [
+            f"b,key=s1 m0=1.5,=7 {t0 * 10**9}",
+            f"b,key=s1 m0=abc,m1=2 {(t0 + 1) * 10**9}",
+            f"b,key=s1 =7 {(t0 + 2) * 10**9}",
+            f"b,key=s2 m0=3 {t0 * 10**9}",
+        ]
+    )
+    r = client.post("/influx", data=body, headers=hdr)
+    assert r.status_code == 200 and r.get_json()["points"] == 4
+    metrics, s1 = rows("s1")
+    assert metrics == ["m0", "m1"]
+    assert s1 == {t0: [1.5, None], t0 + 1: [None, 2.0], t0 + 2: [None, None]}
+    assert rows("s2") == (["m0"], {t0: [3.0]})
+
+    # a non-numeric value never overwrites a stored cell
+    client.post("/influx", data=f"b,key=s1 m0=abc {t0 * 10**9}", headers=hdr)
+    assert rows("s1")[1][t0] == [1.5, None]
+
+    # no timestamp: the current second
+    before = int(time.time())
+    assert client.post("/influx", data="b,key=s2 m0=9", headers=hdr).status_code == 200
+    after = int(time.time())
+    late = {t: v for t, v in rows("s2")[1].items() if t != t0}
+    assert len(late) == 1
+    ((t, v),) = late.items()
+    assert before <= t <= after and v == [9.0]
+
+    # unknown sensor: 404 with the catalog's message; the known sensor
+    # of the same body is still written
+    r = client.post("/influx", data=f"b,key=nosuch m0=1 {t0 * 10**9}", headers=hdr)
+    assert r.status_code == 404
+    assert r.get_json()["error"] == "sensor b.nosuch not found"
+    body = f"b,key=s2 m0=4 {(t0 + 3) * 10**9}\nb,key=nosuch m0=1 {t0 * 10**9}"
+    assert client.post("/influx", data=body, headers=hdr).status_code == 404
+    assert rows("s2")[1][t0 + 3] == [4.0]
