@@ -279,12 +279,14 @@ class OngTsdbSpark:
         key: str | None = None,
     ) -> None:
         """Write (metric, value, ts_sec) long-form tuples — the influx
-        ingest shape after parsing (server.py:214-293).  Each point is
-        one sparse row carrying only its own metric; the upsert's fold
-        then resolves every cell last-non-NaN-wins in point order, so
-        metric order per-point is irrelevant and partial rows merge
-        cellwise (tests/test_client.py:65-70).  A point with an empty
-        metric name still makes its row exist (all NaN)."""
+        ingest shape after parsing (server.py:214-293).  Each run of
+        consecutive points sharing a timestamp (an influx line, a
+        msgpack tuple) becomes one row holding the run's last non-NaN
+        value per metric; the upsert's fold then resolves every cell
+        last-non-NaN-wins across rows in point order, so metric order
+        per-point is irrelevant and partial rows merge cellwise
+        (tests/test_client.py:65-70).  A point with an empty metric
+        name still makes its row exist (all NaN)."""
         from .auth import Action
 
         long_rows = [(str(m), float(v), float(t)) for m, v, t in points]
@@ -294,11 +296,16 @@ class OngTsdbSpark:
         grid = self.catalog.get_config(db, sensor).grid
         self._auth(Action.WRITE, db=db, sensor=sensor, key=key)
         col = {m: i for i, m in enumerate(names)}
-        values = np.full((len(long_rows), len(names)), np.nan)
-        for i, (m, v, _) in enumerate(long_rows):
-            if m:
-                values[i, col[m]] = v
-        ts_sec = np.array([t for _, _, t in long_rows], dtype=np.float64)
+        ts: list[float] = []
+        rows: list[list[float]] = []
+        for m, v, t in long_rows:
+            if not ts or ts[-1] != t:
+                ts.append(t)
+                rows.append([math.nan] * len(names))
+            if m and not math.isnan(v):
+                rows[-1][col[m]] = v
+        values = np.array(rows, dtype=np.float64)
+        ts_sec = np.array(ts, dtype=np.float64)
         self._upsert(db, sensor, *self._driver_batch(grid, ts_sec, values, names), fill_value)
 
     def write_points_multi(
@@ -998,11 +1005,7 @@ class OngTsdbSpark:
             end_ts = _time.time()
         first = grid.chunk_start(float(start_ts))
         last = grid.chunk_start(float(end_ts))
-        chunks = sorted(
-            c
-            for c in self._existing_chunks(db, sensor)
-            if first <= c <= last
-        )
+        chunks = sorted(c for c, _ in self._chunk_dirs(db, sensor) if first <= c <= last)
         for c in chunks:
             # Upper bound must be EXCLUSIVE of the next chunk's start:
             # read() is end-inclusive, and at epoch magnitudes a float
@@ -1037,10 +1040,6 @@ class OngTsdbSpark:
                 except ValueError:
                     pass
         return out
-
-    def _existing_chunks(self, db: str, sensor: str) -> list[float]:
-        """Chunk-start values present on disk."""
-        return [v for v, _ in self._chunk_dirs(db, sensor)]
 
     def read_downsampled(
         self,

@@ -123,7 +123,7 @@ def compact_sensor(
         # partition-directory listing (driver metadata, no data scan)
         # instead of a full-scan distinct — at 100 TB chunk cardinality
         # the listing is object-store metadata, the distinct is a job
-        parts = sorted(engine._existing_chunks(db, sensor))
+        parts = sorted(c for c, _ in engine._chunk_dirs(db, sensor))
         # max(..., 0): keep_recent_chunks > partition count must keep
         # EVERYTHING (a negative slice bound would wrap and compact
         # the oldest chunk the policy says to leave untouched)

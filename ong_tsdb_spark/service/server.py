@@ -35,9 +35,7 @@ from ..catalog import ElementAlreadyExistsError, ElementNotFoundError
 from ..engine import TS_COL, OngTsdbSpark
 from ..pandas_edge import flatten_metrics
 from ..sources.influx import parse_lines
-# upsert_parsed_batch is no longer called here; it stays importable by
-# this module path because enginebench's traced run wraps it here
-from ..streaming.ingest import upsert_parsed_batch, with_ts_sec  # noqa: F401
+from ..streaming.ingest import upsert_parsed_batch
 
 #: reference HTTP_COMPRESS_THRESHOLD (__init__.py): compress read_df
 #: payloads only past this many date bytes
@@ -181,15 +179,6 @@ def create_app(engine: OngTsdbSpark) -> Flask:
         inside the upsert, which is the real authority."""
         return engine.admin_key is not None and _token() is None
 
-    def _write_by_db(by_db: dict[str, dict[str, list]], fv: float) -> None:
-        """Upsert ``{db: {sensor: [(metric, value, ts_sec)]}}``: db by
-        db, every sensor of a db attempted, the first error raised
-        (engine.write_points_multi).  Auth: the upsert enforces
-        per-sensor write keys with the caller's token (reference
-        server.py:214-293 decorator)."""
-        for db, per_sensor in by_db.items():
-            engine.write_points_multi(db, per_sensor, fill_value=fv, key=_token())
-
     @app.post("/influx", defaults={"fill_value": 0.0})
     @app.post("/influx/<fill_value>")
     def influx(fill_value):
@@ -203,15 +192,11 @@ def create_app(engine: OngTsdbSpark) -> Flask:
         if not lines:
             return jsonify(ok=False, error="empty body"), 400
         ldf = engine.spark.createDataFrame([(l,) for l in lines], "line string")
-        # one parser (the streaming ingest's); the body is already in
-        # driver memory, so its parsed points come back in one collect
-        # and take the same per-sensor batch upsert as /influx_binary
-        parsed = with_ts_sec(parse_lines(ldf)).select("db", "sensor", "metric", "value", TS_COL)
-        by_db: dict[str, dict[str, list]] = {}
-        for db, sensor, m, v, ts in parsed.collect():
-            pts = by_db.setdefault(db, {}).setdefault(sensor, [])
-            pts.append((m, math.nan if v is None else v, ts))
-        _write_by_db(by_db, fv)
+        # one parser (the streaming ingest's), then the same per-sensor
+        # batch upsert as /influx_binary.  Auth: the upsert enforces
+        # per-sensor write keys with the caller's token (reference
+        # server.py:214-293 decorator)
+        upsert_parsed_batch(engine, parse_lines(ldf), fill_value=fv, key=_token())
         return jsonify(ok=True, points=len(lines), version=__version__)
 
     @app.post("/influx_binary", defaults={"fill_value": 0.0})
@@ -243,7 +228,8 @@ def create_app(engine: OngTsdbSpark) -> Flask:
                     pts.append((m, v, float(ts_ns) / 1e9))
         except (TypeError, ValueError) as e:
             return jsonify(ok=False, error=f"bad tuple shape: {e}"), 400
-        _write_by_db(by_db, fv)
+        for db, per_sensor in by_db.items():
+            engine.write_points_multi(db, per_sensor, fill_value=fv, key=_token())
         return jsonify(ok=True, points=len(tuples), version=__version__)
 
     # -- reads --------------------------------------------------------

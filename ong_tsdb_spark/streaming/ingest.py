@@ -6,7 +6,11 @@ late data unconditionally accepted, duplicates/out-of-order resolved
 by cell-level last-write-wins (database.py:447-486).  Spark-first
 mapping: any line-delimited stream source (file dir, socket, Kafka)
 -> the vectorized column-expression parser (sources/influx.py) ->
-``foreachBatch`` running the engine's M1 upsert per micro-batch.
+``foreachBatch`` running the engine's M1 upsert per micro-batch, with
+the rows kept in Spark.  Lines that already sit in driver memory (an
+``/influx`` body, a client call) take :func:`upsert_parsed_batch`
+instead: the same parser, then one collect and the driver-batch
+upsert (``engine.write_points_multi``).
 
 No watermark is used *by design*: a watermark would drop late rows,
 which the reference never does.  The upsert is idempotent per
@@ -21,6 +25,8 @@ path has the same property when a client retries).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,9 +59,8 @@ def start_influx_file_stream(
     lines = engine.spark.readStream.format("text").load(input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parsed_batch(engine, parse_lines(batch_df.withColumnRenamed("value", "line")),
-                            default_db, default_sensor, fill_value, key=key,
-                            refresh_rollups=refresh_rollups)
+        _upsert_micro_batch(engine, parse_lines(batch_df.withColumnRenamed("value", "line")),
+                            default_db, default_sensor, fill_value, key, refresh_rollups)
 
     writer = (
         lines.writeStream.foreachBatch(process_batch)
@@ -66,35 +71,20 @@ def start_influx_file_stream(
     return writer.start()
 
 
-def with_ts_sec(parsed: DataFrame) -> DataFrame:
-    """Add ``ts_sec`` to parsed lines: ``ts_ns`` in seconds, or the
-    current whole second for a line without a timestamp (server
-    default, server_utils.py:16; processing-time — see the module
-    docstring's replay caveat)."""
-    return parsed.withColumn(
+def _targeted(
+    parsed: DataFrame, default_db: str | None, default_sensor: str | None
+) -> DataFrame:
+    """Parsed lines with ``ts_sec`` and the default db / sensor filled
+    in where a line names none.  ``ts_sec`` is ``ts_ns`` in seconds,
+    or the current whole second for a line without a timestamp
+    (server default, server_utils.py:16; processing-time — see the
+    module docstring's replay caveat)."""
+    parsed = parsed.withColumn(
         TS_COL,
         F.when(
             F.col("ts_ns").isNotNull(), F.col("ts_ns").cast("double") / F.lit(1e9)
         ).otherwise(F.unix_timestamp(F.current_timestamp()).cast("double")),
     )
-
-
-def upsert_parsed_batch(
-    engine: OngTsdbSpark,
-    parsed: DataFrame,
-    default_db: str | None = None,
-    default_sensor: str | None = None,
-    fill_value: float = 0.0,
-    key: str | None = None,
-    refresh_rollups: bool = False,
-) -> None:
-    """Upsert a parsed long-form batch (db, sensor, metric, value,
-    ts_ns).  Missing ts -> current time (:func:`with_ts_sec`).
-    ``key`` is checked per sensor by the upsert (reference:
-    per-sensor write keys, database.py:170-187).
-    ``refresh_rollups`` incrementally refreshes registered rollups of
-    each written sensor over the batch's [min_ts, max_ts] span."""
-    parsed = with_ts_sec(parsed)
     # parse_lines yields EMPTY STRINGS, not nulls, for absent parts
     # (regexp_extract no-match -> ''; split('')[0] -> '') — nullif
     # first or the defaults would be dead and rows would target a
@@ -109,6 +99,51 @@ def upsert_parsed_batch(
             "sensor",
             F.coalesce(F.nullif(F.col("sensor"), F.lit("")), F.lit(default_sensor)),
         )
+    return parsed
+
+
+def upsert_parsed_batch(
+    engine: OngTsdbSpark,
+    parsed: DataFrame,
+    default_db: str | None = None,
+    default_sensor: str | None = None,
+    fill_value: float = 0.0,
+    key: str | None = None,
+) -> None:
+    """Upsert a parsed long-form batch (db, sensor, metric, value,
+    ts_ns) whose lines came from driver memory — an ``/influx`` body,
+    a client ``write`` call.  Missing ts -> current time.  The points
+    come back in one collect and are upserted db by db with
+    ``engine.write_points_multi``: every sensor of a db is attempted
+    and the first error raised.  ``key`` is checked per sensor by the
+    upsert (reference: per-sensor write keys, database.py:170-187).
+    A streaming micro-batch is never collected: the stream keeps its
+    rows in Spark (:func:`_upsert_micro_batch`)."""
+    by_db: dict[str, dict[str, list]] = {}
+    rows = _targeted(parsed, default_db, default_sensor).select(
+        "db", "sensor", "metric", "value", TS_COL
+    )
+    for db, sensor, m, v, ts in rows.collect():
+        pts = by_db.setdefault(db, {}).setdefault(sensor, [])
+        pts.append((m, math.nan if v is None else v, ts))
+    for db, per_sensor in by_db.items():
+        engine.write_points_multi(db, per_sensor, fill_value=fill_value, key=key)
+
+
+def _upsert_micro_batch(
+    engine: OngTsdbSpark,
+    parsed: DataFrame,
+    default_db: str | None,
+    default_sensor: str | None,
+    fill_value: float,
+    key: str | None,
+    refresh_rollups: bool,
+) -> None:
+    """Upsert one parsed micro-batch without leaving Spark: one
+    ``write_long_df`` per (db, sensor) target, in target order.
+    ``refresh_rollups`` incrementally refreshes registered rollups of
+    each written sensor over the batch's [min_ts, max_ts] span."""
+    parsed = _targeted(parsed, default_db, default_sensor)
     # group by (db, sensor): tiny driver loop over *distinct sensors in
     # this batch* (bounded by catalog size, not data size), exactly the
     # reference's DbMeterData grouping; the per-sensor rows stay in

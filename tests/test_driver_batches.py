@@ -150,3 +150,39 @@ def test_write_points_stores_what_write_long_df_stores(spark, tmp_path, freq):
     _assert_same_store(eng, "drv", "spk")
     got = eng.read_pandas("test", "drv")
     assert len(got) == 5 and got.iloc[1].tolist() == [3.0, 2.0, 5.0]
+
+
+def test_write_points_sends_one_row_per_line(spark, tmp_path, monkeypatch):
+    """An influx line (or msgpack tuple) is a run of points sharing one
+    timestamp; write_points sends it as ONE row, not one row per field,
+    and stores what write_long_df stores."""
+    eng = OngTsdbSpark(spark, str(tmp_path / "tsdb"))
+    eng.create_db("test")
+    for s in ("drv", "spk"):
+        eng.create_sensor("test", s, "1s", ["a", "b"])
+    t0 = 1.7e9 + 0.25
+    nan = float("nan")
+    points = [
+        # one line: a NaN after a value keeps the value, a repeated
+        # field takes the later value, an empty name adds nothing
+        ("a", 1.0, t0), ("b", 2.0, t0), ("a", nan, t0), ("", 3.0, t0), ("b", 4.0, t0),
+        ("a", 5.0, t0 + 0.5), ("b", nan, t0 + 0.5),  # same snapped ts: a later row
+        ("", 6.0, t0 + 2),  # an empty-name-only line still makes its row
+        ("b", 7.0, t0), ("c", 8.0, t0),  # the first timestamp again, a new metric
+    ]
+    sent = []
+    real = OngTsdbSpark._driver_batch
+
+    def counting(self, grid, ts_sec, values, names):
+        sent.append(values.shape)
+        return real(self, grid, ts_sec, values, names)
+
+    monkeypatch.setattr(OngTsdbSpark, "_driver_batch", counting)
+    eng.write_points("test", "drv", points)
+    assert sent == [(4, 3)]
+    long_df = spark.createDataFrame(points, "metric string, value double, ts_sec double")
+    eng.write_long_df("test", "spk", long_df)
+    _assert_same_store(eng, "drv", "spk")
+    got = eng.read_pandas("test", "drv")
+    assert len(got) == 2 and got.iloc[0].tolist() == [5.0, 7.0, 8.0]
+    assert np.isnan(got.iloc[1].tolist()).all()

@@ -115,35 +115,42 @@ def test_written_files_sorted_by_ts(eng):
 
 
 def test_upsert_releases_persisted_batch(eng, monkeypatch):
-    """A write_df upsert leaves no persisted RDD behind after a commit
-    AND after a failed write, and a failed write must release the
-    sensor lock."""
+    """Neither write entry leaves a persisted RDD behind after a commit
+    AND after a failed write (write_spark_df persists its batch for the
+    touched-chunk census and the fold), and a failed write must
+    release the sensor lock and the lock file."""
     from pyspark.sql import DataFrameWriter
 
     jsc = eng.spark.sparkContext._jsc
-    eng.create_sensor("test", "spers", "1h", ["a"])
     pdf = _mk_pdf(10, metrics=("a",))
-    eng.write_df("test", "spers", pdf)
 
-    before = jsc.getPersistentRDDs().size()
-    eng.write_df("test", "spers", pdf.iloc[:3] + 1.0)
-    assert jsc.getPersistentRDDs().size() == before
+    def write_spark(db, sensor, frame):
+        rows = [(float(t.timestamp()), float(v)) for t, v in frame["a"].items()]
+        eng.write_spark_df(db, sensor, eng.spark.createDataFrame(rows, "ts_sec double, a double"))
 
     def broken_parquet(self, *args, **kwargs):
         raise OSError("simulated write failure")
 
-    with monkeypatch.context() as mp:
-        mp.setattr(DataFrameWriter, "parquet", broken_parquet)
-        with pytest.raises(OSError, match="simulated write failure"):
-            eng.write_df("test", "spers", pdf.iloc[:3] + 2.0)
-    assert jsc.getPersistentRDDs().size() == before
-    assert not eng._sensor_lock("test", "spers").locked()
+    for sensor, write in (("spers", eng.write_df), ("sspers", write_spark)):
+        eng.create_sensor("test", sensor, "1h", ["a"])
+        eng.write_df("test", sensor, pdf)
 
-    # the lock file was released too: the next write commits
-    eng.write_df("test", "spers", pdf.iloc[:3] + 3.0)
-    expect = pdf.astype("float32")
-    expect.iloc[:3] += 3.0
-    assert eng.read_pandas("test", "spers").equals(expect)
+        before = jsc.getPersistentRDDs().size()
+        write("test", sensor, pdf.iloc[:3] + 1.0)
+        assert jsc.getPersistentRDDs().size() == before, sensor
+
+        with monkeypatch.context() as mp:
+            mp.setattr(DataFrameWriter, "parquet", broken_parquet)
+            with pytest.raises(OSError, match="simulated write failure"):
+                write("test", sensor, pdf.iloc[:3] + 2.0)
+        assert jsc.getPersistentRDDs().size() == before, sensor
+        assert not eng._sensor_lock("test", sensor).locked(), sensor
+
+        # the lock file was released too: the next write commits
+        write("test", sensor, pdf.iloc[:3] + 3.0)
+        expect = pdf.astype("float32")
+        expect.iloc[:3] += 3.0
+        assert eng.read_pandas("test", sensor).equals(expect), sensor
 
 
 def test_scan_memo_invalidated_on_write(eng):
@@ -632,7 +639,7 @@ def test_upsert_cost_does_not_grow_with_history(eng):
     grow_to(16)
     jobs16, tasks16 = head_upsert_cost(16)
     grow_to(40)
-    assert len(eng._existing_chunks("test", "shist")) == 40
+    assert len(eng._chunk_dirs("test", "shist")) == 40
     jobs40, tasks40 = head_upsert_cost(40)
     assert jobs40 == jobs16
     # one touched chunk: the batch's own slices, the stored chunk's
@@ -643,35 +650,3 @@ def test_upsert_cost_does_not_grow_with_history(eng):
     # 40 grown rows plus the two 3-row heads; the last head won over the first
     assert len(got) == 40 + 2 * 3
     assert got["a"].iloc[-4:].tolist() == [2.0, 3.0, 4.0, 39.0]
-
-
-def test_spark_upsert_releases_persisted_batch(eng, monkeypatch):
-    """write_spark_df persists its normalized batch for the touched-chunk
-    census and the fold; it must unpersist it after a commit AND after
-    a failed write."""
-    from pyspark.sql import DataFrameWriter
-
-    jsc = eng.spark.sparkContext._jsc
-    eng.create_sensor("test", "sspers", "1h", ["a"])
-    pdf = _mk_pdf(10, metrics=("a",))
-    eng.write_df("test", "sspers", pdf)
-
-    def batch(delta):
-        rows = [(float(t.timestamp()), float(v) + delta) for t, v in pdf["a"].iloc[:3].items()]
-        return eng.spark.createDataFrame(rows, "ts_sec double, a double")
-
-    before = jsc.getPersistentRDDs().size()
-    eng.write_spark_df("test", "sspers", batch(1.0))
-    assert jsc.getPersistentRDDs().size() == before
-
-    def broken_parquet(self, *args, **kwargs):
-        raise OSError("simulated write failure")
-
-    with monkeypatch.context() as mp:
-        mp.setattr(DataFrameWriter, "parquet", broken_parquet)
-        with pytest.raises(OSError, match="simulated write failure"):
-            eng.write_spark_df("test", "sspers", batch(2.0))
-    assert jsc.getPersistentRDDs().size() == before
-    expect = pdf.astype("float32")
-    expect.iloc[:3] += 1.0
-    assert eng.read_pandas("test", "sspers").equals(expect)
