@@ -205,6 +205,24 @@ SCALE_FAMILIES = [
 ]
 
 
+def session_builder(cpus: str, app_name: str) -> SparkSession.Builder:
+    """The bench session's conf on ``local[cpus]``, not yet created.
+    ``main()`` and the tools that re-time bench rows (driver_drift,
+    scale100, split_profile, opt_profile, quiet_bench) all build from
+    it, so their numbers share one session shape."""
+    return (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app_name)
+        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+    )
+
+
 def bench_bpe_trainer(spark, sf_dir: str) -> dict[str, float]:
     """The BPE TRAINER itself (plans/bpe.py train_bpe_merges), not just
     pair counting: 24 merges over the documents corpus — the n-gram-
@@ -665,7 +683,7 @@ def bench_engine(spark, sf_dir: str, serve_steady: int = 0) -> dict[str, float]:
         # fold dominates the fixed write/commit cost and best-of-3
         # fresh-sensor writes step over the slope: every same-window
         # pairing measured 32c < 8c (best-of-3 2.4 vs 2.9, 3.7 vs 4.2,
-        # 2.65 vs 5.4 s; tools/r15_scalerow_warm.py).  Each shot writes
+        # 2.65 vs 5.4 s; BENCH.md round 15).  Each shot writes
         # a FRESH sensor so all three time the identical fresh-write
         # shape; replicas are value-identical so last-wins stays
         # deterministic.  Excluded from core_total like the 100x row.
@@ -748,18 +766,7 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ong_tsdb_spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .getOrCreate()
-    )
+    spark = session_builder(cpus, "ong_tsdb_spark-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     if "--scale10" in sys.argv:

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-US_PER_SEC = 1_000_000
-
 
 def epoch_us(df: DataFrame, col: str) -> Column:
     """epoch µs (bigint) from either a long-ns or a timestamp column —
@@ -46,19 +44,6 @@ def epoch_ns(df: DataFrame, col: str) -> Column:
     if dt == "bigint":
         return F.col(col)
     return F.unix_micros(F.col(col).cast("timestamp")) * F.lit(1000)
-
-
-def snap_sec(ts_sec_col: Column, tick_seconds: int) -> Column:
-    """Snap whole-second epoch down to a tick grid (reference
-    Chunker.getpos truncation, chunker.py:88-95)."""
-    t = int(tick_seconds)
-    return (ts_sec_col - (ts_sec_col % F.lit(t))).cast("long")
-
-
-def bucket_us(ts_us_col: Column, bucket_seconds: int) -> Column:
-    """Tumbling-window bucket start in epoch seconds from a µs col."""
-    b = int(bucket_seconds) * US_PER_SEC
-    return ((ts_us_col - (ts_us_col % F.lit(b))) / F.lit(US_PER_SEC)).cast("long")
 
 
 def nan_sum(cols: list[str]) -> Column:

@@ -208,17 +208,3 @@ def _floor_to_array(x: np.ndarray, step: float) -> np.ndarray:
         raise ValueError("timestamp out of range (|ts| >= 2**62 s)")
     q = np.floor(x / step).astype(np.int64)
     return q * int(step) if step == int(step) else q * step
-
-
-def epoch_seconds(ts: Column) -> Column:
-    """TimestampType -> (possibly fractional) epoch seconds as double.
-
-    ``unix_timestamp`` truncates to whole seconds; we keep microseconds
-    because the reference keeps float64 seconds on the wire.
-    """
-    return ts.cast("double")
-
-
-def seconds_to_ts(sec: Column) -> Column:
-    """Epoch seconds (int/double) -> TimestampType (UTC-based)."""
-    return F.timestamp_seconds(sec)

@@ -735,22 +735,6 @@ def simhash_portable(
     return agg.select(F.col(id_col), F.expr(sig_sql).alias("simhash"))
 
 
-def simhash_portable_oracle_sql(bits: int = 32) -> str:
-    """The DuckDB twin of simhash_portable, generated to keep the 32
-    per-bit terms in lockstep with the Spark side."""
-    terms = " + ".join(
-        f"(CASE WHEN SUM(CASE WHEN (h32 >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN {1 << b} ELSE 0 END)"
-        for b in range(bits)
-    )
-    return f"""
-    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-    h AS (SELECT doc_id, ('0x' || substr(md5(t), 1, 8))::BIGINT AS h32 FROM tok)
-    SELECT doc_id, CAST({terms} AS BIGINT) AS simhash
-    FROM h GROUP BY doc_id
-    """
-
-
 def simhash64_pairs_oracle_sql() -> str:
     """DuckDB twin of ``simhash_candidate_pairs``: per-token XXH64
     (seed 42, identical to Spark's xxhash64 — emitted by

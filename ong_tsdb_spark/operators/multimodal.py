@@ -25,7 +25,6 @@ registry query uses it for digest-determinism).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -45,19 +44,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("duration_s", T.FloatType()),
     ]
 )
-
-
-def _decode_one(payload: bytes, media_type: str) -> tuple[int, int, float]:
-    """STUB decoder: deterministic fake (width, height, duration)
-    derived from the payload digest.  Replace with a real decoder;
-    raise NotImplementedError for formats you refuse to fake."""
-    if media_type not in ("image", "audio", "video"):
-        raise NotImplementedError(f"unknown media_type {media_type!r}")
-    d = hashlib.sha256(payload).digest()
-    width = 64 + d[0] % 192  # 64..255, deterministic per content
-    height = 64 + d[1] % 192
-    duration = 0.0 if media_type == "image" else float(1 + d[2] % 60)
-    return width, height, duration
 
 
 def extract_features(

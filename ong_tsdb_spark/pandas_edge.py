@@ -1,4 +1,4 @@
-"""The pandas boundary: flatten/unflatten multiindex metric names and
+"""The pandas boundary: flatten multiindex metric names and
 convert between Spark DataFrames and the reference's pandas shapes.
 
 The reference's client rebuilds a pandas ``MultiIndex`` column index
@@ -26,12 +26,6 @@ def flatten_metric(metric: Any) -> str:
     if isinstance(metric, str):
         return metric
     return _SEP.join(str(p).replace("|", _ESC) for p in metric)
-
-
-def unflatten_metric(name: str) -> Any:
-    if _SEP not in name:
-        return name.replace(_ESC, "|")
-    return [p.replace(_ESC, "|") for p in name.split(_SEP)]
 
 
 def flatten_metrics(metrics: list) -> list[str]:

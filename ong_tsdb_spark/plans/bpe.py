@@ -24,17 +24,18 @@ regex onto the lineage, re-running the whole chain per count job.
 
 At 100 TB the binding constraint is ROUNDS (each is a full corpus
 scan + shuffle): greedy merges chain ((a,t) -> (at,c) -> (atc,h)), so
-same-round "non-interacting merge" batching caps near 2x.  The
-default ``guard="cascade"`` mode breaks the chain dependence while
-staying bit-identical to the reference loop: each round collects a
-top-K n-gram summary (levels 1..G, one aggregate job), and the driver
-simulates the exact greedy loop over it — counts of pairs created by
-an in-round merge are derived from higher-level n-grams by
-inclusion-exclusion, with interval bounds covering everything the
-top-K truncation hid — accepting merges as long as the argmax stays
-provable, and falling back to a single-merge round when it is not.
-Cluster-wide work stays bounded by one corpus scan per round and
-driver memory by the G*K summary + merge table.
+same-round "non-interacting merge" batching (``guard="exact"``) caps
+near 2x.  The default ``guard="cascade"`` mode breaks the chain
+dependence while staying bit-identical to the reference loop: each
+round collects a top-K n-gram summary (levels 1..G, one aggregate
+job), and the driver simulates the exact greedy loop over it — counts
+of pairs created by an in-round merge are derived from higher-level
+n-grams by inclusion-exclusion, with interval bounds covering
+everything the top-K truncation hid — accepting merges as long as the
+argmax stays provable, and falling back to a single-merge round when
+it is not.  Cluster-wide work stays bounded by one corpus scan per
+round and driver memory by the G*K summary + merge table.  These two
+modes are the only ones; both learn the reference table exactly.
 """
 
 from __future__ import annotations
@@ -120,7 +121,6 @@ def _exact_batch(
     floor: int,
     limit: int,
     min_count: int,
-    guard: str = "exact",
     prior_outputs: frozenset[str] = frozenset(),
 ) -> list[tuple[str, str]]:
     """The longest PREFIX of the (count desc, pair asc)-sorted
@@ -151,34 +151,7 @@ def _exact_batch(
     A self-pair (a, a) interacts with its own output ("a a a a" ->
     "aa aa" changes (a,a)'s count nonlinearly), so it always ENDS the
     batch after being accepted.  Any violated guard ends the batch —
-    the next round recounts and continues exactly.
-
-    ``guard="disjoint"`` drops the new-pair and floor guards, keeping
-    only symbol-disjointness.  It is NOT strictly greedy-exact: a
-    merge can create a pair ((a,b) -> (ab,c)) that true greedy would
-    take before the next disjoint candidate, so the learned table can
-    deviate in ORDER (and occasionally membership) from the reference
-    — still a deterministic, valid BPE table.
-
-    ``guard="stale"`` accepts the FULL top-``limit`` ranking with no
-    interaction checks at all — frequency-batched BPE: the merges are
-    applied sequentially per word in ranked order (the chained
-    regexp_replace rewrite IS sequential application, so interacting
-    merges compose correctly, e.g. (t,h) then (th,e)), but merge k+1
-    of a round is chosen by PRE-round counts instead of post-merge-k
-    counts.  This is the standard production approximation for
-    30k-merge vocabs: rounds = ceil(n_merges / batch), a true
-    ~batch-x job reduction.
-
-    Why three modes: on natural text the exact guards — and even bare
-    disjointness — bind hard (the top pairs all share e/t/h/space-
-    adjacent symbols; after (t,h) the true next merge usually IS
-    (th,e)), capping exact/disjoint batching near ~1.6-1.9x measured;
-    only stale-count batching breaks the sequential dependence."""
-    if guard not in ("exact", "disjoint", "stale"):
-        raise ValueError(
-            f"guard must be 'exact', 'disjoint' or 'stale', got {guard!r}"
-        )
+    the next round recounts and continues exactly."""
     left_max: dict[str, int] = {}
     right_max: dict[str, int] = {}
     for p, n in top:
@@ -186,7 +159,6 @@ def _exact_batch(
         left_max[a] = max(left_max.get(a, 0), n)
         right_max[b] = max(right_max.get(b, 0), n)
     accepted: list[tuple[str, str]] = []
-    used: set[str] = set()
     lefts: set[str] = set()
     rights: set[str] = set()
     outputs: set[str] = set()
@@ -195,9 +167,7 @@ def _exact_batch(
         if len(accepted) >= limit or n < min_count:
             break
         a, b = p.split(" ")
-        if accepted and guard == "disjoint" and (a in used or b in used):
-            break
-        if accepted and guard == "exact":
+        if accepted:
             # EDGE-interaction rule (VERDICT r6 #5 relaxation): a later
             # candidate (a, b) is count-affected by an earlier accepted
             # (p, q) only when a == q (its left is the earlier RIGHT —
@@ -212,8 +182,6 @@ def _exact_batch(
             if n <= new_bound or n <= floor:
                 break
         accepted.append((a, b))
-        if guard == "stale":
-            continue
         if a == b:
             break  # self-pair: nonlinear self-interaction ends the batch
         if a + b in prior_outputs or a + b in outputs:
@@ -224,7 +192,6 @@ def _exact_batch(
             # ADD to that symbol's pair counts, voiding the new-pair
             # bound (a max, not a sum) — force a recount
             break
-        used.update((a, b, a + b))
         lefts.add(a)
         rights.add(b)
         outputs.add(a + b)
@@ -562,10 +529,10 @@ def train_bpe_merges(
     ordered merge table [(a, b), ...]; stops early when the best
     remaining pair occurs fewer than ``min_count`` times.
 
-    Determinism & exactness: every non-stale mode yields the IDENTICAL
+    Determinism & exactness: both ``guard`` modes yield the IDENTICAL
     merge table to the one-merge-per-round reference loop (pinned
     against the pure-Python twin in tests/test_bpe.py), independent of
-    partitioning and of ``batch``.  Modes, fastest first:
+    partitioning and of ``batch``.  The two modes, fastest first:
 
     * ``guard="cascade"`` (default): per round, ONE n-gram-summary
       aggregate (levels 1..CASCADE_G, top-CASCADE_TOPK each), then a
@@ -582,9 +549,8 @@ def train_bpe_merges(
       NON-INTERACTING merges only (edge-sharing interaction rule +
       created-pair/floor bounds, :func:`_exact_batch`) — chains cap
       this near ~2x on natural text.
-    * ``guard="disjoint"`` / ``guard="stale"``: see
-      :func:`_exact_batch` — stale is the frequency-batched production
-      approximation (table may deviate from reference order).
+
+    Any other ``guard`` raises ``ValueError``.
 
     The sequential loop is one Spark job pair PER MERGE — at a
     production 30k-merge vocab that is 60k+ jobs; cascade turns that
@@ -625,11 +591,8 @@ def train_bpe_merges(
     history: list[int] = []
     driver_rows: list[int] = []
     memo_peak = 0
-    if guard not in ("cascade", "exact", "disjoint", "stale"):
-        raise ValueError(
-            "guard must be 'cascade', 'exact', 'disjoint' or 'stale', "
-            f"got {guard!r}"
-        )
+    if guard not in ("cascade", "exact"):
+        raise ValueError(f"guard must be 'cascade' or 'exact', got {guard!r}")
     batch = max(1, int(batch))
     cur = (
         ensure_parallelism(df)
@@ -708,7 +671,6 @@ def train_bpe_merges(
             floor = ranked[-1][1] if len(ranked) == top_m else 0
             accepted = _exact_batch(
                 ranked, floor, limit=limit, min_count=min_count,
-                guard=guard,
                 prior_outputs=frozenset(a + b for a, b in merges),
             )
             if not accepted:
@@ -718,8 +680,8 @@ def train_bpe_merges(
         merges.extend(accepted)
         syms = F.col("syms")
         # chained replaces apply IN ACCEPTANCE ORDER — required where
-        # in-batch merges interact (cascade chains, stale mode); a
-        # no-op reordering for the disjoint/exact modes
+        # in-batch merges interact (cascade chains); a no-op
+        # reordering for the exact mode's non-interacting batches
         for a, b in accepted:
             syms = F.regexp_replace(
                 syms, merges_pattern(a, b), _quote_replacement(a + b)

@@ -10,14 +10,11 @@ audit; "repair" (X2) degenerates to dropping unreadable files.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import PART_COL, TS_COL, OngTsdbSpark
-from ..pandas_edge import flatten_metrics
 
 
 @dataclass
@@ -39,7 +36,9 @@ def verify_sensor(engine: OngTsdbSpark, db: str, sensor: str) -> SensorStats:
     (snap(ts) != ts would mean a corrupted write path)."""
     cfg = engine.catalog.get_config(db, sensor)
     grid = cfg.grid
-    df = engine._read_raw(db, sensor, cfg)
+    df = engine._read_stored(
+        db, sensor, cfg, [e for _, e in engine._chunk_dirs(db, sensor)]
+    )
     if df is None:
         return SensorStats(db, sensor, 0, 0, None, None, 0, 0)
     snapped = grid.snap_expr(F.col(TS_COL)).cast("double")
@@ -117,22 +116,18 @@ def compact_sensor(
     Returns the number of partitions rewritten."""
     with engine._sensor_lock(db, sensor), engine._file_lock(db, sensor):
         cfg = engine.catalog.get_config(db, sensor)
-        df = engine._read_raw(db, sensor, cfg)
-        if df is None:
-            return 0
         # partition-directory listing (driver metadata, no data scan)
         # instead of a full-scan distinct — at 100 TB chunk cardinality
         # the listing is object-store metadata, the distinct is a job
-        parts = sorted(c for c, _ in engine._chunk_dirs(db, sensor))
+        parts = sorted(engine._chunk_dirs(db, sensor))
         # max(..., 0): keep_recent_chunks > partition count must keep
         # EVERYTHING (a negative slice bound would wrap and compact
         # the oldest chunk the policy says to leave untouched)
         cold = parts[: max(len(parts) - keep_recent_chunks, 0)] if keep_recent_chunks else parts
         if not cold:
             return 0
-        known = flatten_metrics(cfg.metrics)
-        cols = [TS_COL] + [c for c in known if c in df.columns] + [PART_COL]
-        cold_df = df.filter(F.col(PART_COL).isin(cold)).select(*cols)
+        # only the cold dirs are read; the hot ones are never listed
+        cold_df = engine._read_stored(db, sensor, cfg, [e for _, e in cold])
         # the RETURN value counts partitions that actually hold rows,
         # not listed directories: dynamic overwrite only touches
         # partitions with data, and stale/empty directories (possible

@@ -148,6 +148,16 @@ def test_exact_batch_unit_guards():
     assert bpe._exact_batch(top, floor=0, limit=10, min_count=2) == [("a", "b")]
 
 
+def test_train_bpe_rejects_unknown_guard():
+    """Only the two exact modes exist; anything else fails before any
+    Spark work (so no DataFrame is needed)."""
+    import pytest
+
+    for guard in ("greedy", "EXACT", ""):
+        with pytest.raises(ValueError, match="'cascade' or 'exact'"):
+            bpe.train_bpe_merges(None, guard=guard)
+
+
 def test_train_bpe_batched_equals_sequential(spark):
     """The batched trainer must produce the IDENTICAL merge table as
     the one-merge-per-round loop (and the pure-Python reference) —
@@ -197,34 +207,6 @@ def test_train_bpe_batched_randomized(spark):
         assert got == want, texts
         saved_rounds.append((bpe.LAST_TRAIN_ROUNDS, len(got)))
     assert any(r < m for r, m in saved_rounds if m > 1), saved_rounds
-
-
-def test_train_bpe_stale_mode_rounds_and_validity(spark):
-    """guard="stale" (frequency-batched, the production approximation):
-    rounds == ceil(n_merges/batch), the table is deterministic across
-    reruns, interacting in-batch merges compose sequentially (chained
-    rewrite), and the learned table drives tokenization like any
-    other merge table."""
-    texts = [
-        "the theatre then thens", "there is the thesis these theses",
-        "other ether tether the", "aaaa aaa aa the",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "doc_id long, text string")
-    got = bpe.train_bpe_merges(df, n_merges=8, batch=4, guard="stale")
-    assert bpe.LAST_TRAIN_ROUNDS == 2  # ceil(8/4)
-    assert got == bpe.train_bpe_merges(df, n_merges=8, batch=4, guard="stale")
-    assert len(got) == len(set(got)) == 8
-    # the first merge of each round IS the true greedy argmax for that
-    # round's counts, so round boundaries anchor to exact greedy
-    seq = bpe.train_bpe_merges(df, n_merges=8, batch=1)
-    assert got[0] == seq[0]
-    # stale tables tokenize fine (sequential application per word)
-    out = bpe.tokenize_with_merges(df, got).collect()
-    for r in out:
-        t = texts[r["doc_id"]]
-        want = [s for w in t.split(" ") if w for s in bpe.apply_merges_py(w, got)]
-        assert r["tokens"] == want
 
 
 def test_cascade_equals_sequential_and_cuts_rounds(spark):
@@ -396,7 +378,6 @@ def test_train_history_invariant_on_exhaustion(spark):
     for kwargs in (
         {"guard": "cascade", "batch": 8},
         {"guard": "exact", "batch": 4},
-        {"guard": "disjoint", "batch": 4},
     ):
         got = bpe.train_bpe_merges(df, n_merges=50, **kwargs)
         hist = list(bpe.LAST_TRAIN_HISTORY)

@@ -179,15 +179,31 @@ def test_scan_memo_invalidated_on_write(eng):
     assert eng.read("test", "memo").count() == n0
 
     # a write that adds NEW chunk dirs: the stale listing would miss
-    # the new partitions entirely
+    # the new partitions entirely.  Asserted through read(), the Spark
+    # path the memo serves (read_pandas of a small window is pyarrow)
+    cached = eng._read_raw("test", "memo", cfg)
     idx = pd.date_range("2024-06-01", periods=48, freq="1h", tz="UTC")
     later = pd.DataFrame({"a": np.arange(48.0)}, index=idx)
     eng.write_df("test", "memo", later)
-    assert eng.read("test", "memo").count() == n0 + 48
+    assert len(eng._chunk_dirs("test", "memo")) == 2  # a new chunk dir
+    assert eng._read_raw("test", "memo", cfg) is not cached
+    got = eng.read("test", "memo").toPandas()
+    assert len(got) == n0 + 48
+    assert got["a"].iloc[-48:].tolist() == list(np.arange(48.0, dtype="float32"))
+    assert eng._read_raw("test", "memo", cfg) is eng._read_raw("test", "memo", cfg)
 
-    # schema growth: new column must be visible immediately
+    # schema growth: the new column must be visible immediately, with
+    # the fill value in the rows written before it existed
+    cached = eng._read_raw("test", "memo", cfg)
     ts0 = float(pdf.index[0].timestamp())
     eng.write_points("test", "memo", [("b", 7.0, ts0)], fill_value=0.0)
+    grown = eng.catalog.get_config("test", "memo")
+    assert eng._read_raw("test", "memo", grown) is not cached
+    got = eng.read("test", "memo").toPandas()
+    assert list(got.columns) == ["ts_sec", "a", "b"]
+    assert len(got) == n0 + 48
+    assert got["b"].iloc[0] == np.float32(7.0)
+    assert (got["b"].iloc[1:] == np.float32(0.0)).all()
     got = eng.read_pandas("test", "memo")
     assert got["b"].iloc[0] == np.float32(7.0)
     assert got["b"].iloc[1] == np.float32(0.0)
@@ -598,47 +614,60 @@ def test_local_data_dir_resolves_file_uri_forms(spark, tmp_path):
     assert eng3._local_data_dir("d", "s") == local
 
 
+_D1S = 16384  # chunk span of a 1 s grid
+_T0 = pd.Timestamp("2023-01-02", tz="UTC").timestamp() // _D1S * _D1S
+
+
+def _grow_to(eng, sensor, n_chunks):
+    """Write one point per chunk to a 1 s sensor: ``n_chunks`` chunk
+    dirs, the last point at ``_T0 + _D1S * (n_chunks - 1) + 5``."""
+    idx = pd.to_datetime(_T0 + _D1S * np.arange(n_chunks) + 5, unit="s", utc=True)
+    pdf = pd.DataFrame({"a": np.arange(n_chunks, dtype="float64")}, index=idx)
+    eng.write_df("test", sensor, pdf)
+
+
+def _group_cost(sc, fn):
+    """``(fn(), jobs, tasks)`` for the Spark jobs ``fn`` ran under a
+    fresh job group; tasks counts only tasks that ran (a skipped stage
+    completes none)."""
+    import uuid
+
+    group = f"cost-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "measured call")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = 0
+    for j in jobs:
+        for s in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(s)
+            tasks += info.numCompletedTasks if info is not None else 0
+    return out, len(jobs), tasks
+
+
 def test_upsert_cost_does_not_grow_with_history(eng):
     """An upsert reads only the chunk dirs its batch touches: growing a
     sensor from 16 to 40 chunk dirs (past Spark's 32-path parallel
     listing threshold) must not add a job or tasks.  Two head upserts
     run back to back with no read between them, so no read-side cache
     can hide a listing of the whole sensor."""
-    import uuid
-
     sc = eng.spark.sparkContext
-    tracker = sc.statusTracker()
-    d = 16384  # chunk span of a 1 s grid
-    t0 = pd.Timestamp("2023-01-02", tz="UTC").timestamp() // d * d
     eng.create_sensor("test", "shist", "1s", ["a"])
 
-    def grow_to(n_chunks):
-        idx = pd.to_datetime(t0 + d * np.arange(n_chunks) + 5, unit="s", utc=True)
-        pdf = pd.DataFrame({"a": np.arange(n_chunks, dtype="float64")}, index=idx)
-        eng.write_df("test", "shist", pdf)
-
     def head_upsert_cost(n_chunks):
-        head = pd.to_datetime(t0 + d * (n_chunks - 1) + np.arange(3), unit="s", utc=True)
+        head = pd.to_datetime(_T0 + _D1S * (n_chunks - 1) + np.arange(3), unit="s", utc=True)
         pdf = pd.DataFrame({"a": [1.0, 2.0, 3.0]}, index=head)
         eng.write_df("test", "shist", pdf)
-        group = f"hist-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "second head upsert")
-        try:
-            eng.write_df("test", "shist", pdf + 1.0)
-        finally:
-            sc.setJobGroup(None, None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = tracker.getJobIdsForGroup(group)
-        tasks = 0  # tasks that ran: a skipped stage completes none
-        for j in jobs:
-            for s in tracker.getJobInfo(j).stageIds:
-                info = tracker.getStageInfo(s)
-                tasks += info.numCompletedTasks if info is not None else 0
-        return len(jobs), tasks
+        _, jobs, tasks = _group_cost(sc, lambda: eng.write_df("test", "shist", pdf + 1.0))
+        return jobs, tasks
 
-    grow_to(16)
+    _grow_to(eng, "shist", 16)
     jobs16, tasks16 = head_upsert_cost(16)
-    grow_to(40)
+    _grow_to(eng, "shist", 40)
     assert len(eng._chunk_dirs("test", "shist")) == 40
     jobs40, tasks40 = head_upsert_cost(40)
     assert jobs40 == jobs16
@@ -650,3 +679,27 @@ def test_upsert_cost_does_not_grow_with_history(eng):
     # 40 grown rows plus the two 3-row heads; the last head won over the first
     assert len(got) == 40 + 2 * 3
     assert got["a"].iloc[-4:].tolist() == [2.0, 3.0, 4.0, 39.0]
+
+
+def test_last_timestamp_fallback_reads_only_last_chunk(eng, monkeypatch):
+    """Without parquet stats (object stores, stat-less files) the last
+    timestamp comes from a Spark read of the last chunk dir alone.
+    Right after a write (no read-side cache), growing the sensor from
+    16 to 40 chunk dirs, past Spark's 32-path parallel listing
+    threshold, must not add a listing job over the sensor's history."""
+    monkeypatch.setattr(eng, "_last_ts_from_stats", lambda *a, **k: None)
+    sc = eng.spark.sparkContext
+    eng.create_sensor("test", "lastfb", "1s", ["a"])
+    costs = {}
+    for n in (16, 40):
+        _grow_to(eng, "lastfb", n)
+        assert len(eng._chunk_dirs("test", "lastfb")) == n
+        got, jobs, tasks = _group_cost(
+            sc, lambda: eng.get_last_timestamp("test", "lastfb")
+        )
+        assert got == _T0 + _D1S * (n - 1) + 5
+        costs[n] = (jobs, tasks)
+    # one chunk dir: its scan task and the max's final task, at most a
+    # few more for AQE — nothing per stored chunk dir
+    assert costs[40][0] == costs[16][0], costs
+    assert all(tasks <= 4 for _, tasks in costs.values()), costs

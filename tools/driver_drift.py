@@ -21,7 +21,7 @@ in BENCH.md.
 
 ``--recheck`` measures the verdicts: each mover that is a registry
 entry is re-run IN ISOLATION under the best-of-3 discard-first
-protocol (the ``tools/drifter_recheck_r12.py`` pattern) on the bench
+protocol (the round-12 recheck recorded in BENCH.md) on the bench
 session, then classified against the two driver readings —
 ``recheck-exonerated`` when the isolated time sits at the rN-1 level
 (the rN reading was driver-host noise), ``drift-real`` when it
@@ -170,25 +170,12 @@ def recheck(mover_rows: list[dict], new_round: int) -> dict:
     import time
 
     sys.path.insert(0, REPO)
-    from pyspark.sql import SparkSession
-
     import bench
     from ong_tsdb_spark import entry_queries
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("driver-drift-recheck")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .getOrCreate()
-    )
+    spark = bench.session_builder(cpus, "driver-drift-recheck").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     registry = entry_queries.queries()
 

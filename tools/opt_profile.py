@@ -26,6 +26,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+import bench  # noqa: E402
 from ong_tsdb_spark import entry_queries  # noqa: E402
 
 PLANS_DIR = os.path.join(
@@ -34,20 +35,15 @@ PLANS_DIR = os.path.join(
 
 
 def build_session(cpus: str, ui: bool) -> SparkSession:
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("opt-profile")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    """The bench session, plus the UI (and its job/stage retention)
+    that the REST metrics below are read from."""
+    return (
+        bench.session_builder(cpus, "opt-profile")
         .config("spark.ui.enabled", str(ui).lower())
         .config("spark.ui.retainedJobs", "5000")
         .config("spark.ui.retainedStages", "5000")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        .getOrCreate()
     )
-    return b.getOrCreate()
 
 
 def rest(path: str):
@@ -137,7 +133,6 @@ def profile(spark, name, fn, sf_dir, runs, tag, do_run):
         ],
     )
     print(json.dumps(rec), file=sys.stderr)
-    import bench
     bench.release_blocks(spark)
     return rec
 

@@ -9,8 +9,8 @@ bench, so the judge can read the numbers instead of trusting prose:
 
     python tools/quiet_bench.py --round 10 [--movers q1 q2 q3]
 
-Protocol (same methodology as tools/drift_ab.py so the numbers are
-comparable): measure each target FRESH (first work in a new JVM — one
+Protocol, on bench.py's session (``local[$SPARK_GRAFT_CPUS]``, default
+32): measure each target FRESH (first work in a new JVM — one
 warmup execution, then best of 3) and LATE (after aging the session
 with 40 other registry queries).  The engine family (bench.py's
 bench_engine: ingest / upsert / range read / last-ts / serving read)
@@ -40,7 +40,6 @@ interpretation belongs to BENCH.md.
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import os
 import sys
@@ -68,25 +67,12 @@ def main(argv=None) -> int:
     ap.add_argument("--out", default=None)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod", os.path.join(REPO, "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    import bench
     from ong_tsdb_spark import entry_queries
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = bench.session_builder(cpus, "quiet-bench").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
 
     reg = entry_queries.queries()
     movers = [m for m in args.movers if m in reg]
@@ -96,7 +82,7 @@ def main(argv=None) -> int:
 
     def timed(name: str, runs: int = 3) -> float:
         fn = reg[name]
-        fn(spark, args.sf_dir).count()  # warmup (drift_ab methodology)
+        fn(spark, args.sf_dir).count()  # warmup, then best of ``runs``
         best = float("inf")
         for _ in range(runs):
             t0 = time.perf_counter()

@@ -45,21 +45,10 @@ sys.path.insert(0, REPO)
 
 
 def _make_session():
-    from pyspark.sql import SparkSession
+    import bench
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale100")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .getOrCreate()
-    )
+    spark = bench.session_builder(cpus, "scale100").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

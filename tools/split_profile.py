@@ -21,8 +21,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
+import bench  # noqa: E402
 from ong_tsdb_spark import entry_queries  # noqa: E402
 
 
@@ -35,21 +34,8 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("split-profile")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .getOrCreate()
-    )
+    spark = bench.session_builder(cpus, "split-profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    import bench  # noqa: E402
 
     registry = entry_queries.queries()
     names = [n for n in args.only.split(",") if n] or list(bench.HEADLINE)
