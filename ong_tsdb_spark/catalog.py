@@ -8,11 +8,12 @@ under ``<base>/<db>/<sensor>/_sensor.json`` next to the sensor's
 Parquet dataset; data files live in ``<base>/<db>/<sensor>/data/``
 partitioned by ``chunk_start``.
 
-Pure Python, no Spark dependency — catalog operations are metadata-only
-and O(1), exactly like the reference's mkdir/JSON writes. At cluster
-scale the base dir is an object-store prefix; the JSON config is tiny
-and read once per session (the reference likewise caches configs in
-memory, ``database.py:107-123``).
+Catalog operations are metadata-only and O(1), exactly like the
+reference's mkdir/JSON writes, and go through a filesystem adapter
+(:mod:`ong_tsdb_spark.object_store`): ``os`` calls for a plain path,
+the JVM Hadoop FileSystem for a scheme-qualified base dir (at cluster
+scale an object-store prefix).  The same class, and the same writer
+lock and version file, serve both.
 
 Multiindex metric names (list-of-lists) are stored as-is in JSON; the
 flatten/unflatten codec for Parquet column names lives in
@@ -23,13 +24,13 @@ MultiIndex only at the read edge, ``client.py:545-547``).
 from __future__ import annotations
 
 import json
-import os
+import posixpath
 import re
-import shutil
 from dataclasses import dataclass, field
 from typing import Any
 
 from .grid import Grid, parse_freq
+from .locks import VERSION_NAME, SensorFileLock
 
 CONFIG_NAME = "_sensor.json"
 DATA_DIR = "data"
@@ -118,47 +119,55 @@ class SensorConfig:
 
 
 class Catalog:
-    """Filesystem-backed catalog of databases and sensors."""
+    """Catalog of databases and sensors over a filesystem adapter
+    (:mod:`ong_tsdb_spark.object_store`: ``LocalFs`` for plain paths,
+    ``HadoopFs`` for hdfs://, s3a://, file:/ ...)."""
 
-    def __init__(self, base_dir: str):
+    def __init__(self, base_dir: str, fs):
         self.base_dir = base_dir
-        os.makedirs(base_dir, exist_ok=True)
+        self.fs = fs
+        fs.mkdirs(base_dir)
 
-    # -- paths --------------------------------------------------------
+    # -- paths (slash joins: plain paths and URIs alike) ---------------
     def db_path(self, db: str) -> str:
-        return os.path.join(self.base_dir, _check_name(db))
+        return posixpath.join(self.base_dir, _check_name(db))
 
     def sensor_path(self, db: str, sensor: str) -> str:
-        return os.path.join(self.db_path(db), _check_name(sensor))
+        return posixpath.join(self.db_path(db), _check_name(sensor))
 
     def data_path(self, db: str, sensor: str) -> str:
-        return os.path.join(self.sensor_path(db, sensor), DATA_DIR)
+        return posixpath.join(self.sensor_path(db, sensor), DATA_DIR)
 
     def _config_path(self, db: str, sensor: str) -> str:
-        return os.path.join(self.sensor_path(db, sensor), CONFIG_NAME)
+        return posixpath.join(self.sensor_path(db, sensor), CONFIG_NAME)
+
+    def _version_path(self, db: str, sensor: str) -> str:
+        return posixpath.join(self.sensor_path(db, sensor), VERSION_NAME)
 
     # -- databases (M3) -----------------------------------------------
     def exist_db(self, db: str) -> bool:
-        return os.path.isdir(self.db_path(db))
+        return self.fs.isdir(self.db_path(db))
 
     def create_db(self, db: str) -> None:
         if self.exist_db(db):
             raise ElementAlreadyExistsError(f"database {db!r} already exists")
-        os.makedirs(self.db_path(db))
+        self.fs.mkdirs(self.db_path(db))
 
     def delete_db(self, db: str) -> None:
         if not self.exist_db(db):
             raise ElementNotFoundError(f"database {db!r} not found")
-        shutil.rmtree(self.db_path(db))
+        self.fs.delete(self.db_path(db))
 
     def get_dbs(self) -> list[str]:
         return sorted(
-            d for d in os.listdir(self.base_dir) if os.path.isdir(os.path.join(self.base_dir, d))
+            d
+            for d in self.fs.listdir(self.base_dir)
+            if self.fs.isdir(posixpath.join(self.base_dir, d))
         )
 
     # -- sensors (M3/M4/M6) --------------------------------------------
     def exist_sensor(self, db: str, sensor: str) -> bool:
-        return os.path.isfile(self._config_path(db, sensor))
+        return self.fs.isfile(self._config_path(db, sensor))
 
     def create_sensor(self, db: str, sensor: str, config: SensorConfig) -> None:
         if not self.exist_db(db):
@@ -166,39 +175,37 @@ class Catalog:
         if self.exist_sensor(db, sensor):
             raise ElementAlreadyExistsError(f"sensor {db}.{sensor} already exists")
         config.grid  # validate freq eagerly (raises on bad freq)
-        os.makedirs(self.sensor_path(db, sensor), exist_ok=True)
+        self.fs.mkdirs(self.sensor_path(db, sensor))
         self._write_config(db, sensor, config)
 
     def delete_sensor(self, db: str, sensor: str) -> None:
         if not self.exist_sensor(db, sensor):
             raise ElementNotFoundError(f"sensor {db}.{sensor} not found")
-        shutil.rmtree(self.sensor_path(db, sensor))
+        self.fs.delete(self.sensor_path(db, sensor))
 
     def get_sensors(self, db: str) -> list[str]:
         if not self.exist_db(db):
             raise ElementNotFoundError(f"database {db!r} not found")
         return sorted(
             s
-            for s in os.listdir(self.db_path(db))
-            if os.path.isfile(os.path.join(self.db_path(db), s, CONFIG_NAME))
+            for s in self.fs.listdir(self.db_path(db))
+            if self.fs.isfile(posixpath.join(self.db_path(db), s, CONFIG_NAME))
         )
 
     def get_config(self, db: str, sensor: str) -> SensorConfig:
         try:
-            with open(self._config_path(db, sensor)) as f:
-                return SensorConfig.from_json(json.load(f))
+            data = self.fs.read_bytes(self._config_path(db, sensor))
         except FileNotFoundError:
             raise ElementNotFoundError(f"sensor {db}.{sensor} not found") from None
+        return SensorConfig.from_json(json.loads(data))
 
     def _write_config(self, db: str, sensor: str, config: SensorConfig) -> None:
-        # atomic: temp + os.replace, like the reference's safe_createfile
+        # atomic replace, like the reference's safe_createfile
         # (fileutils.py:325-376)
         _check_metrics(config.metrics)  # one chokepoint: create + growth
-        path = self._config_path(db, sensor)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(config.to_json(), f)
-        os.replace(tmp, path)
+        self.fs.write_bytes_atomic(
+            self._config_path(db, sensor), json.dumps(config.to_json()).encode()
+        )
 
     def update_metadata(self, db: str, sensor: str, metadata: dict[str, Any]) -> None:
         """M4 — overwrite sensor metadata (database.py:287-298)."""
@@ -212,32 +219,31 @@ class Catalog:
         self._write_config(db, sensor, config)
 
     # -- data-dir + lock/version hooks (engine-facing) ----------------
-    # The engine talks to storage ONLY through these, so the
-    # object-store catalog (object_store.HadoopCatalog) can swap in
-    # Hadoop FS calls without any engine change.
     def data_exists(self, db: str, sensor: str) -> bool:
-        return os.path.isdir(self.data_path(db, sensor))
+        return self.fs.isdir(self.data_path(db, sensor))
 
     def list_data_partitions(self, db: str, sensor: str) -> list[str]:
         p = self.data_path(db, sensor)
-        return os.listdir(p) if os.path.isdir(p) else []
+        return self.fs.listdir(p) if self.fs.isdir(p) else []
 
     def delete_data_partition(self, db: str, sensor: str, entry: str) -> None:
-        shutil.rmtree(os.path.join(self.data_path(db, sensor), entry))
+        self.fs.delete(posixpath.join(self.data_path(db, sensor), entry))
 
     def write_lock(self, db: str, sensor: str, timeout: float, stale_after: float):
-        from .locks import SensorFileLock
-
         return SensorFileLock(
-            self.sensor_path(db, sensor), timeout=timeout, stale_after=stale_after
+            self.sensor_path(db, sensor), timeout=timeout, stale_after=stale_after, fs=self.fs
         )
 
     def get_version(self, db: str, sensor: str) -> int:
-        from .locks import read_version
-
-        return read_version(self.sensor_path(db, sensor))
+        try:
+            return int(self.fs.read_bytes(self._version_path(db, sensor)).strip() or 0)
+        except (FileNotFoundError, ValueError):
+            return 0
 
     def bump_version(self, db: str, sensor: str) -> int:
-        from .locks import bump_version
-
-        return bump_version(self.sensor_path(db, sensor))
+        """Increment the sensor's write version.  MUST be called while
+        holding the sensor's write lock — the read-modify-replace is
+        then race-free, and the atomic replace keeps readers atomic."""
+        v = self.get_version(db, sensor) + 1
+        self.fs.write_bytes_atomic(self._version_path(db, sensor), str(v).encode())
+        return v

@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from .catalog import Catalog, SensorConfig
 from .grid import Grid
+from .object_store import HadoopFs, LocalFs, is_remote_uri, local_path
 from .pandas_edge import (
     build_column_index,
     flatten_metric,
@@ -105,13 +106,11 @@ class OngTsdbSpark:
     ):
         self.spark = spark
         # scheme-qualified base dirs (hdfs://, s3a://, file:/ ...) go
-        # through the Hadoop FS catalog; plain paths stay pure-Python
-        from .object_store import HadoopCatalog, is_remote_uri
-
-        self.catalog = (
-            HadoopCatalog(spark, base_dir) if is_remote_uri(base_dir) else Catalog(base_dir)
-        )
+        # through the Hadoop FileSystem; plain paths stay on os calls
         from .locks import DEFAULT_STALE_AFTER
+
+        fs = HadoopFs(spark, base_dir) if is_remote_uri(base_dir) else LocalFs()
+        self.catalog = Catalog(base_dir, fs)
 
         self.admin_key = admin_key
         self.lock_timeout = lock_timeout
@@ -504,22 +503,9 @@ class OngTsdbSpark:
             rows = norm
             stored = self._read_stored(db, sensor, cfg, [e for v, e in chunk_dirs if v in want])
             if stored is not None:
-                # stored rows enter the fold as the OLDEST arrival, so
-                # any batch value beats them.  A stored NULL means the
-                # chunk predates the metric -> its fill value
-                # (add_new_metrics, database.py:366-423); a stored NaN
-                # is an empty cell -> NULL, never a winner
-                stored_cols = []
-                for m in known:
-                    c = F.col(_q(m))
-                    fill = cfg.fills.get(m)
-                    if fill is not None and not _is_nan(fill):
-                        c = F.coalesce(c, F.lit(fill).cast("float"))
-                    stored_cols.append(F.when(~F.isnan(c), c).alias(m))
-                stored = stored.select(
-                    TS_COL, PART_COL, F.lit(-1).cast("long").alias("_arrival"), *stored_cols
+                rows = self._fold_input(stored, cfg, known).unionByName(
+                    norm, allowMissingColumns=True
                 )
-                rows = stored.unionByName(norm, allowMissingColumns=True)
             # one task per touched chunk is the most a one-file-per-
             # chunk-dir layout can use
             width = max(1, self.spark.sparkContext.defaultParallelism)
@@ -544,8 +530,30 @@ class OngTsdbSpark:
             .parquet(*[f"{base}/{e}" for e in dirs])
         )
 
+    @staticmethod
+    def _fold_input(stored: DataFrame, cfg: SensorConfig, known: list[str]) -> DataFrame:
+        """Stored rows as fold input.  They enter as the OLDEST arrival,
+        so any batch value beats them.  A stored NULL means the chunk
+        predates the metric -> its fill value (add_new_metrics,
+        database.py:366-423); a stored NaN is an empty cell -> NULL,
+        never a winner."""
+        cols = []
+        for m in known:
+            c = F.col(_q(m))
+            fill = cfg.fills.get(m)
+            if fill is not None and not _is_nan(fill):
+                c = F.coalesce(c, F.lit(fill).cast("float"))
+            cols.append(F.when(~F.isnan(c), c).alias(m))
+        return stored.select(TS_COL, PART_COL, F.lit(-1).cast("long").alias("_arrival"), *cols)
+
     def _fold_and_write(
-        self, db: str, sensor: str, rows: DataFrame, known: list[str], width: int
+        self,
+        db: str,
+        sensor: str,
+        rows: DataFrame,
+        known: list[str],
+        width: int,
+        codec: str = "zstd",
     ) -> None:
         """Last non-null wins per (chunk, ts, metric) by ``_arrival``,
         then a dynamic overwrite of the chunks present in ``rows``.
@@ -586,7 +594,7 @@ class OngTsdbSpark:
             .write.mode("overwrite")
             .partitionBy(PART_COL)
             .option("partitionOverwriteMode", "dynamic")
-            .option("compression", "zstd")
+            .option("compression", codec)
             .parquet(self.catalog.data_path(db, sensor))
         )
 
@@ -798,28 +806,13 @@ class OngTsdbSpark:
         return pdf
 
     def _local_data_dir(self, db: str, sensor: str) -> str | None:
-        """The sensor's data directory IF it is plain-local-filesystem
-        (pyarrow-reachable without Hadoop); None for object-store URIs
-        (those reads stay on the Spark path)."""
+        """The sensor's data directory IF it is on this machine
+        (pyarrow-reachable without Hadoop, ``file:`` URIs included);
+        None for remote URIs (those reads stay on the Spark path)."""
         import os
 
-        p = self.catalog.data_path(db, sensor)
-        if p.startswith("file:"):
-            # both file:///p and the Hadoop-normalized file:/p (and
-            # file://localhost/p) are this machine; file://host/p is
-            # not.  Same normalization as streaming/dedup._local_dir
-            # (ADVICE r13) — here the miss only cost the pyarrow fast
-            # path (the Spark path still served the read), but a
-            # file:-based catalog should get serve-tier latency too.
-            from urllib.parse import urlparse
-
-            parsed = urlparse(p)
-            if parsed.netloc not in ("", "localhost"):
-                return None
-            p = parsed.path
-        if "://" in p:
-            return None
-        return p if os.path.isdir(p) else None
+        p = local_path(self.catalog.data_path(db, sensor))
+        return p if p is not None and os.path.isdir(p) else None
 
     def _read_pandas_fast(
         self,

@@ -1,49 +1,52 @@
 """Cross-process write serialization for sensors (ROADMAP #2).
 
-The engine's read-merge-overwrite upsert (engine.py write_spark_df) is
+The engine's read-merge-overwrite upsert (engine.py ``_upsert``) is
 safe across *threads* via the per-sensor ``threading.Lock`` (reference
 parity: ``_get_sensor_lock``, database.py:154-168), but two separate
 driver *processes* each hold their own lock registry — their
 merge/overwrite cycles could interleave and lose updates.
 
-This module adds the filesystem protocol:
+``SensorFileLock`` is the filesystem protocol, written once over the
+adapters of :mod:`ong_tsdb_spark.object_store` (``LocalFs`` for plain
+paths, ``HadoopFs`` for ``hdfs://``, ``s3a://``, ``file:/`` ...):
 
-* ``SensorFileLock`` — an exclusive lockfile (``O_CREAT|O_EXCL`` is
-  atomic on POSIX) in the sensor directory.  The HOLDER heartbeats the
-  lockfile (touches it every ``stale_after/4`` seconds) so a live lock
-  never looks stale no matter how long the Spark write takes; waiters
-  break a lock only after observing the *identical* payload+mtime
-  stale on two consecutive polls, so a heartbeating holder (mtime
-  advances) or a freshly re-created lock (new payload) is never
-  unlinked.  Acquisition spins with a backoff up to ``timeout``.
-* a ``_version`` file bumped atomically (temp + ``os.replace``) after
-  every committed write while the lock is held — a monotonic change
-  cursor so other processes/readers can cheaply detect that their
-  cached view is stale.
+* an exclusive lockfile (``create_exclusive``: ``O_CREAT|O_EXCL``
+  locally, ``create(overwrite=False)`` on Hadoop FS) in the sensor
+  directory.  The HOLDER heartbeats the lockfile (``touch`` every
+  ``stale_after/4`` seconds) so a live lock never looks stale no
+  matter how long the Spark write takes; waiters break a lock only
+  after observing the *identical* payload+mtime stale on two
+  consecutive polls, so a heartbeating holder (mtime advances) or a
+  freshly re-created lock (new payload) is never deleted.  Acquisition
+  polls at the adapter's ``lock_poll`` interval up to ``timeout``.
+* the sensor's write version (``_version``, read and bumped by
+  :class:`~ong_tsdb_spark.catalog.Catalog`) is replaced atomically
+  after every committed write while the lock is held — a monotonic
+  change cursor so other processes/readers can cheaply detect that
+  their cached view is stale.
 
-Caveat (documented, inherent to unlink-based breaking): plain POSIX has
-no compare-and-delete, so between a waiter's final payload check and
-its ``unlink`` the holder could release and a third process acquire —
-the waiter would then unlink the third process's fresh lock.  The
-two-observation protocol shrinks that window to microseconds and the
-heartbeat means it only opens at all after a writer has been silent for
-``stale_after`` (default 30 min, far beyond any sane Spark write);
-stale-breaking therefore implies a *potential* dual-writer window and
-``stale_after`` should stay well above worst-case write time.
-
-On an object store the same protocol maps to conditional PUT
-(if-none-match) for the lock and the version object; the local-FS
-implementation mirrors the reference's safe_createfile discipline
-(fileutils.py:325-376).
+Caveat (documented, inherent to delete-based breaking): these
+filesystems have no compare-and-delete, so between a waiter's final
+payload check and its delete the holder could release and a third
+process acquire — the waiter would then delete the third process's
+fresh lock.  The two-observation protocol shrinks that window to
+microseconds and the heartbeat means it only opens at all after a
+writer has been silent for ``stale_after`` (default 30 min, far beyond
+any sane Spark write); stale-breaking therefore implies a *potential*
+dual-writer window and ``stale_after`` should stay well above
+worst-case write time.  On S3A exclusive create is itself best-effort
+(see :mod:`ong_tsdb_spark.object_store`).
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import posixpath
 import threading
 import time
 
+from .object_store import LocalFs
 
 _LOG = logging.getLogger(__name__)
 
@@ -73,12 +76,12 @@ class SensorFileLock:
         sensor_dir: str,
         timeout: float = 60.0,
         stale_after: float = DEFAULT_STALE_AFTER,
-        poll: float = 0.02,
+        fs=None,
     ):
-        self.path = os.path.join(sensor_dir, LOCK_NAME)
+        self.fs = LocalFs() if fs is None else fs
+        self.path = posixpath.join(sensor_dir, LOCK_NAME)
         self.timeout = timeout
         self.stale_after = stale_after
-        self.poll = poll
         self.heartbeat_every = max(stale_after / 4.0, 0.05)
         self._hb_stop: threading.Event | None = None
         self._hb_thread: threading.Thread | None = None
@@ -89,25 +92,17 @@ class SensorFileLock:
 
     def acquire(self) -> None:
         deadline = time.monotonic() + self.timeout
-        while True:
-            try:
-                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                payload = f"{os.getpid()} {time.time()} {id(self)}\n".encode()
-                try:
-                    os.write(fd, payload)
-                finally:
-                    os.close(fd)
-                self._payload = payload
-                self._start_heartbeat()
-                return
-            except FileExistsError:
-                self._maybe_break_stale()
-                if time.monotonic() >= deadline:
-                    raise SensorLockTimeout(
-                        f"could not acquire sensor write lock {self.path} "
-                        f"within {self.timeout}s"
-                    ) from None
-                time.sleep(self.poll)
+        payload = f"{os.getpid()} {time.time()} {id(self)}\n".encode()
+        while not self.fs.create_exclusive(self.path, payload):
+            self._maybe_break_stale()
+            if time.monotonic() >= deadline:
+                raise SensorLockTimeout(
+                    f"could not acquire sensor write lock {self.path} "
+                    f"within {self.timeout}s"
+                )
+            time.sleep(self.fs.lock_poll)
+        self._payload = payload
+        self._start_heartbeat()
 
     # -- holder heartbeat --------------------------------------------
     def _start_heartbeat(self) -> None:
@@ -120,10 +115,9 @@ class SensorFileLock:
                     # hold a NEW holder's lock — touching it would keep
                     # someone else's (possibly crashed) lock looking
                     # live forever (code-review r9)
-                    with open(self.path, "rb") as f:
-                        if f.read() != self._payload:
-                            return  # not ours anymore — stand down
-                    os.utime(self.path, None)  # live: keep mtime fresh
+                    if self.fs.read_bytes(self.path) != self._payload:
+                        return  # not ours anymore — stand down
+                    self.fs.touch(self.path, self._payload)  # keep mtime fresh
                 except OSError:
                     return  # released (or broken) — nothing to keep alive
 
@@ -134,11 +128,10 @@ class SensorFileLock:
     # -- waiter-side stale breaking ----------------------------------
     def _lock_state(self) -> tuple[bytes, float] | None:
         try:
-            st = os.stat(self.path)
-            with open(self.path, "rb") as f:
-                return f.read(), st.st_mtime
+            mtime = self.fs.mtime(self.path)
+            return self.fs.read_bytes(self.path), mtime
         except OSError:
-            return None  # released between our O_EXCL failure and here
+            return None  # released between our failed create and here
 
     def _maybe_break_stale(self) -> None:
         state = self._lock_state()
@@ -150,8 +143,8 @@ class SensorFileLock:
             # past the stale horizon: the holder is not heartbeating
             # and nobody re-created the file — treat as crashed.
             try:
-                os.unlink(self.path)
-            except FileNotFoundError:
+                self.fs.delete(self.path, recursive=False)
+            except OSError:
                 pass
             self._observed = None
         else:
@@ -163,16 +156,15 @@ class SensorFileLock:
             self._hb_thread.join(timeout=2.0)
             self._hb_stop = self._hb_thread = None
         try:
-            # unlink ONLY our own lockfile: if this holder stalled past
+            # delete ONLY our own lockfile: if this holder stalled past
             # the stale horizon (VM pause/SIGSTOP), a waiter has broken
-            # the lock and acquired its own — unconditionally unlinking
-            # here would delete the NEW holder's lock and let a third
+            # the lock and acquired its own — unconditionally deleting
+            # here would remove the NEW holder's lock and let a third
             # writer in alongside it (code-review r9).  The payload is
             # written once at acquire and never changes (the heartbeat
-            # touches mtime only), so it identifies the owner.
-            with open(self.path, "rb") as f:
-                if f.read() != self._payload:
-                    return  # someone else's lock now — leave it alone
+            # only refreshes mtime), so it identifies the owner.
+            if self.fs.read_bytes(self.path) != self._payload:
+                return  # someone else's lock now — leave it alone
         except FileNotFoundError:
             return  # already gone — nothing to release
         except OSError as ex:
@@ -180,17 +172,14 @@ class SensorFileLock:
             # indistinguishable from "not ours" — do NOT delete on a
             # guess, and do NOT raise out of release()/__exit__ where
             # it would mask the with-block's real exception (ADVICE
-            # r9; the Hadoop twin never raises from release either).
-            # The stale horizon reclaims the file if it was ours.
+            # r9).  The stale horizon reclaims the file if it was ours.
             # logging, not a warning: under -W error / filterwarnings=
             # error the emission itself would become the raise this
             # branch exists to prevent (code-review r10).
             _LOG.warning("lock release: could not read %s: %s", self.path, ex)
             return
         try:
-            os.unlink(self.path)
-        except FileNotFoundError:
-            pass
+            self.fs.delete(self.path, recursive=False)
         except OSError as ex:
             _LOG.warning("lock release: could not delete %s: %s", self.path, ex)
 
@@ -200,24 +189,3 @@ class SensorFileLock:
 
     def __exit__(self, *exc) -> None:
         self.release()
-
-
-def read_version(sensor_dir: str) -> int:
-    try:
-        with open(os.path.join(sensor_dir, VERSION_NAME)) as f:
-            return int(f.read().strip() or 0)
-    except (FileNotFoundError, ValueError):
-        return 0
-
-
-def bump_version(sensor_dir: str) -> int:
-    """Increment the sensor's write version.  MUST be called while
-    holding the sensor's SensorFileLock — the read-modify-replace is
-    then race-free, and ``os.replace`` keeps readers atomic."""
-    path = os.path.join(sensor_dir, VERSION_NAME)
-    v = read_version(sensor_dir) + 1
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    os.replace(tmp, path)
-    return v

@@ -1,18 +1,31 @@
-"""Object-store / HDFS catalog backend (ROADMAP #5).
+"""The filesystems under the catalog and the writer lock.
 
-``HadoopCatalog`` is the :class:`~ong_tsdb_spark.catalog.Catalog`
-interface implemented over the JVM Hadoop ``FileSystem`` API that
-Spark already carries — so the same engine code runs against
-``hdfs://``, ``s3a://``, ``gs://``, ``abfs://`` or ``file:/`` base
-URIs with zero extra Python dependencies.  Parquet I/O goes through
-Spark (which speaks these schemes natively); only the tiny JSON
-config / lock / version files needed the explicit FS calls here.
+:class:`~ong_tsdb_spark.catalog.Catalog` and
+:class:`~ong_tsdb_spark.locks.SensorFileLock` are written once, against
+the few calls below; the engine picks the adapter from the base dir
+(:func:`is_remote_uri`):
+
+* :class:`LocalFs` — plain paths, ``os`` syscalls: an ``O_EXCL``
+  create, an ``os.utime`` heartbeat, temp + ``os.replace``.
+* :class:`HadoopFs` — scheme-qualified URIs (``hdfs://``, ``s3a://``,
+  ``gs://``, ``abfs://``, ``file:/``) through the JVM Hadoop
+  ``FileSystem`` that Spark already carries, so no extra Python
+  dependency.  Parquet I/O goes through Spark, which speaks these
+  schemes natively; only the small JSON config / lock / version files
+  need these calls.
+
+Both raise ``FileNotFoundError`` for a missing path and ``OSError`` for
+any other I/O failure, which is all the lock protocol distinguishes.
 
 Atomicity notes per backend:
 
-* **HDFS / file:** ``rename`` and ``createNewFile`` are atomic — the
-  config write and the writer lock have the same guarantees as the
-  local-FS catalog.
+* **local, HDFS:** rename / ``os.replace`` and exclusive create are
+  atomic — the config write and the writer lock have the same
+  guarantees on each.
+* **file: through Hadoop:** rename is atomic, but Hadoop's local
+  ``create(overwrite=False)`` checks ``exists`` and then creates, so
+  two writers racing for a free lock can both win.  A ``file:`` base
+  dir is for tests and single-host runs.
 * **S3A and friends:** rename is copy+delete and create-exclusive is
   best-effort (S3 has no native compare-and-set through the Hadoop
   API).  The lock still serializes cooperating writers in practice
@@ -25,37 +38,128 @@ Atomicity notes per backend:
 
 from __future__ import annotations
 
-import json
-import logging
-import posixpath
+import contextlib
+import os
+import re
+import shutil
+import threading
 import time
-from typing import Any
+from urllib.parse import urlparse
 
-from .catalog import (
-    CONFIG_NAME,
-    DATA_DIR,
-    Catalog,
-    ElementAlreadyExistsError,
-    ElementNotFoundError,
-    SensorConfig,
-    _check_name,
-)
-from .locks import SensorLockTimeout
 
-_LOG = logging.getLogger(__name__)
+def is_remote_uri(base_dir: str) -> bool:
+    """True for scheme-qualified URIs (hdfs://, s3a://, file:/ ...)
+    that go through :class:`HadoopFs`.  Schemes must be at least two
+    characters so Windows drive letters stay local paths."""
+    return bool(re.match(r"^[A-Za-z][A-Za-z0-9+.\-]+:/", base_dir))
+
+
+def local_path(path: str) -> str | None:
+    """The local filesystem path behind ``path``, or None for a remote
+    URI.  Hadoop normalizes ``file://`` URIs to the single-slash form
+    ``file:/path`` (no netloc), so both spellings — and the rare
+    ``file://localhost/path`` — are this machine; ``file://host/path``
+    is not (ADVICE r13: a bare ``'://' in path`` test missed
+    ``file:/path``)."""
+    if path.startswith("file:"):
+        parsed = urlparse(path)
+        if parsed.netloc not in ("", "localhost"):
+            return None
+        return parsed.path or None
+    return None if "://" in path else path
+
+
+class LocalFs:
+    """The catalog/lock filesystem calls over ``os``."""
+
+    #: writer-lock poll interval, seconds
+    lock_poll = 0.02
+
+    exists = staticmethod(os.path.exists)
+    isdir = staticmethod(os.path.isdir)
+    isfile = staticmethod(os.path.isfile)
+    listdir = staticmethod(os.listdir)
+
+    @staticmethod
+    def mkdirs(p: str) -> None:
+        os.makedirs(p, exist_ok=True)
+
+    @staticmethod
+    def delete(p: str, recursive: bool = True) -> bool:
+        try:
+            if os.path.isdir(p) and not os.path.islink(p):
+                shutil.rmtree(p) if recursive else os.rmdir(p)
+            else:
+                os.unlink(p)
+        except FileNotFoundError:
+            return False
+        return True
+
+    @staticmethod
+    def mtime(p: str) -> float:
+        return os.stat(p).st_mtime
+
+    @staticmethod
+    def read_bytes(p: str) -> bytes:
+        with open(p, "rb") as f:
+            return f.read()
+
+    @staticmethod
+    def write_bytes_atomic(p: str, data: bytes) -> None:
+        """temp + ``os.replace``, like the reference's safe_createfile
+        (fileutils.py:325-376)."""
+        tmp = f"{p}.{os.getpid()}.{threading.get_ident()}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, p)
+
+    @staticmethod
+    def create_exclusive(p: str, data: bytes) -> bool:
+        """Create ``p`` holding ``data``; False if it already exists
+        (``O_CREAT|O_EXCL`` is atomic on POSIX)."""
+        try:
+            fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            return False
+        try:
+            os.write(fd, data)
+        finally:
+            os.close(fd)
+        return True
+
+    @staticmethod
+    def touch(p: str, data: bytes) -> None:
+        """Refresh ``p``'s mtime (``data`` is its current content)."""
+        os.utime(p, None)
 
 
 class HadoopFs:
-    """Minimal py4j façade over ``org.apache.hadoop.fs.FileSystem``."""
+    """The same calls over ``org.apache.hadoop.fs.FileSystem`` (py4j)."""
+
+    #: writer-lock poll interval, seconds (each poll is JVM round trips)
+    lock_poll = 0.05
 
     def __init__(self, spark, base_uri: str):
         self._jvm = spark._jvm
         self._conf = spark._jsc.hadoopConfiguration()
-        self._base = base_uri
         self._fs = self.path(base_uri).getFileSystem(self._conf)
 
     def path(self, p: str):
         return self._jvm.org.apache.hadoop.fs.Path(p)
+
+    @contextlib.contextmanager
+    def _io(self, p: str):
+        """Java I/O errors as Python ones: FileNotFoundError when ``p``
+        is gone (whatever the JVM said — a file that vanished mid-call
+        is the benign race), OSError otherwise."""
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            yield
+        except Py4JJavaError as ex:
+            if not self.exists(p):
+                raise FileNotFoundError(p) from None
+            raise OSError(f"{p}: {ex.java_exception.toString()}") from ex
 
     def exists(self, p: str) -> bool:
         return self._fs.exists(self.path(p))
@@ -72,25 +176,27 @@ class HadoopFs:
         self._fs.mkdirs(self.path(p))
 
     def delete(self, p: str, recursive: bool = True) -> bool:
-        return self._fs.delete(self.path(p), recursive)
+        with self._io(p):
+            return self._fs.delete(self.path(p), recursive)
 
     def listdir(self, p: str) -> list[str]:
         return [st.getPath().getName() for st in self._fs.listStatus(self.path(p))]
 
     def mtime(self, p: str) -> float:
-        return self._fs.getFileStatus(self.path(p)).getModificationTime() / 1000.0
+        with self._io(p):
+            return self._fs.getFileStatus(self.path(p)).getModificationTime() / 1000.0
 
     def read_bytes(self, p: str) -> bytes:
-        stream = self._fs.open(self.path(p))
-        try:
-            # commons-io ships on Spark's classpath; one JVM round trip
-            # instead of a per-byte py4j loop
-            data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            return bytes(data)
-        finally:
-            stream.close()
+        with self._io(p):
+            stream = self._fs.open(self.path(p))
+            try:
+                # commons-io ships on Spark's classpath; one JVM round
+                # trip instead of a per-byte py4j loop
+                return bytes(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+            finally:
+                stream.close()
 
-    def write_bytes(self, p: str, data: bytes, overwrite: bool = True) -> None:
+    def _write(self, p: str, data: bytes, overwrite: bool) -> None:
         stream = self._fs.create(self.path(p), overwrite)
         try:
             stream.write(bytearray(data))
@@ -100,299 +206,30 @@ class HadoopFs:
     def write_bytes_atomic(self, p: str, data: bytes) -> None:
         """temp + rename — atomic on HDFS/local, copy+delete on S3A."""
         tmp = f"{p}.{int(time.time() * 1e6)}.tmp"
-        self.write_bytes(tmp, data)
+        self._write(tmp, data, overwrite=True)
         self._fs.delete(self.path(p), False)
         if not self._fs.rename(self.path(tmp), self.path(p)):
             self._fs.delete(self.path(tmp), False)
             raise OSError(f"rename failed for {p}")
 
     def create_exclusive(self, p: str, data: bytes) -> bool:
-        """createNewFile-style exclusive create: atomic on HDFS/local;
-        best-effort on S3A (see module docstring)."""
+        """create(overwrite=False), False if ``p`` exists: atomic on
+        HDFS, check-then-create on file:, best-effort on S3A (see the
+        module docstring)."""
+        from py4j.protocol import Py4JJavaError
+
         try:
-            stream = self._fs.create(self.path(p), False)  # overwrite=False
-        except Exception:
-            return False
-        try:
-            stream.write(bytearray(data))
-        finally:
-            stream.close()
+            self._write(p, data, overwrite=False)
+        except Py4JJavaError as ex:
+            # the lock may already be released again by the time we look
+            held = "FileAlreadyExistsException" in ex.java_exception.getClass().getName()
+            if held or self.exists(p):
+                return False
+            raise OSError(f"{p}: {ex.java_exception.toString()}") from ex
         return True
 
-
-class HadoopSensorLock:
-    """The locks.SensorFileLock protocol over HadoopFs: holder
-    heartbeats the lock object (rewrite refreshes mtime) and waiters
-    only break a lock after seeing the identical payload+mtime stale on
-    two consecutive polls — see locks.py for the protocol rationale and
-    the documented stale-break caveat (no compare-and-delete on these
-    filesystems either)."""
-
-    def __init__(
-        self,
-        fs: HadoopFs,
-        sensor_dir: str,
-        timeout: float = 60.0,
-        stale_after: float | None = None,
-        poll: float = 0.05,
-    ):
-        from .locks import DEFAULT_STALE_AFTER
-
-        self.fs = fs
-        self.path = posixpath.join(sensor_dir, "_writer.lock")
-        self.timeout = timeout
-        self.stale_after = DEFAULT_STALE_AFTER if stale_after is None else stale_after
-        self.poll = poll
-        self.heartbeat_every = max(self.stale_after / 4.0, 0.05)
-        self._payload: bytes | None = None
-        self._hb_stop = None
-        self._hb_thread = None
-        self._observed: tuple[bytes, float] | None = None
-
-    def acquire(self) -> None:
-        import os
-
-        deadline = time.monotonic() + self.timeout
-        payload = f"{os.getpid()} {time.time()}\n".encode()
-        while True:
-            if self.fs.create_exclusive(self.path, payload):
-                self._payload = payload
-                self._start_heartbeat()
-                return
-            self._maybe_break_stale()
-            if time.monotonic() >= deadline:
-                raise SensorLockTimeout(
-                    f"could not acquire sensor write lock {self.path} "
-                    f"within {self.timeout}s"
-                )
-            time.sleep(self.poll)
-
-    def _start_heartbeat(self) -> None:
-        import threading
-
-        stop = threading.Event()
-
-        def beat() -> None:
-            while not stop.wait(self.heartbeat_every):
-                try:
-                    # ownership check first: if this holder stalled past
-                    # the stale horizon and a waiter broke + re-acquired
-                    # the lock, blindly rewriting would clobber the NEW
-                    # holder's lock and silently re-admit us alongside
-                    # it (code-review r9)
-                    if self.fs.read_bytes(self.path) != self._payload:
-                        return  # lock is someone else's now — stand down
-                    # rewrite with our own payload: refreshes mtime on
-                    # every Hadoop FS (no portable utime equivalent)
-                    self.fs.write_bytes(self.path, self._payload, overwrite=True)
-                except Exception:
-                    return
-        t = threading.Thread(target=beat, name="hadoop-lock-heartbeat", daemon=True)
-        t.start()
-        self._hb_stop, self._hb_thread = stop, t
-
-    def _lock_state(self) -> tuple[bytes, float] | None:
-        try:
-            return self.fs.read_bytes(self.path), self.fs.mtime(self.path)
-        except Exception:
-            return None  # vanished between create-exclusive and here
-
-    def _maybe_break_stale(self) -> None:
-        state = self._lock_state()
-        if state is None or time.time() - state[1] <= self.stale_after:
-            self._observed = None
-            return
-        if self._observed == state:
-            try:
-                self.fs.delete(self.path, False)
-            except Exception:
-                pass
-            self._observed = None
-        else:
-            self._observed = state
-
-    def release(self) -> None:
-        if self._hb_stop is not None:
-            self._hb_stop.set()
-            self._hb_thread.join(timeout=2.0)
-            self._hb_stop = self._hb_thread = None
-        try:
-            # delete only OUR lock (see locks.SensorFileLock.release):
-            # after a stale break the file belongs to a new holder
-            if not self.fs.exists(self.path):
-                return  # already gone — nothing to release
-            if self.fs.read_bytes(self.path) != self._payload:
-                return
-        except Exception as ex:
-            # Unreadable == not provably ours — never delete on a
-            # guess.  But first distinguish the benign race: the file
-            # can vanish between the exists() probe and read_bytes()
-            # (a waiter broke + released concurrently) — that is the
-            # silent already-gone case, same as the local twin's
-            # FileNotFoundError branch (code-review r10).  A file that
-            # is still there but unreadable gets a LOG (not a silent
-            # pass: that used to leave OUR lockfile behind with no
-            # signal, stalling the next writer for the full stale
-            # horizon — ADVICE r9; and not warnings.warn, which itself
-            # raises under -W error, out of __exit__).
-            try:
-                if not self.fs.exists(self.path):
-                    return  # vanished mid-release — benign race
-            except Exception:
-                pass
-            _LOG.warning(
-                "hadoop lock release: could not read %s: %s", self.path, ex
-            )
-            return
-        try:
-            self.fs.delete(self.path, False)
-        except Exception as ex:
-            _LOG.warning(
-                "hadoop lock release: could not delete %s: %s", self.path, ex
-            )
-
-    def __enter__(self) -> "HadoopSensorLock":
-        self.acquire()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
-
-class HadoopCatalog(Catalog):
-    """Catalog over any Hadoop-FS scheme.  Same layout as the local
-    catalog: ``<base>/<db>/<sensor>/_sensor.json`` + ``data/``."""
-
-    def __init__(self, spark, base_uri: str):
-        self.base_dir = base_uri.rstrip("/")
-        self.fs = HadoopFs(spark, self.base_dir)
-        self.fs.mkdirs(self.base_dir)
-
-    # -- paths (posix joins on URIs) ----------------------------------
-    def db_path(self, db: str) -> str:
-        return posixpath.join(self.base_dir, _check_name(db))
-
-    def sensor_path(self, db: str, sensor: str) -> str:
-        return posixpath.join(self.db_path(db), _check_name(sensor))
-
-    def data_path(self, db: str, sensor: str) -> str:
-        return posixpath.join(self.sensor_path(db, sensor), DATA_DIR)
-
-    def _config_path(self, db: str, sensor: str) -> str:
-        return posixpath.join(self.sensor_path(db, sensor), CONFIG_NAME)
-
-    # -- databases ----------------------------------------------------
-    def exist_db(self, db: str) -> bool:
-        return self.fs.isdir(self.db_path(db))
-
-    def create_db(self, db: str) -> None:
-        if self.exist_db(db):
-            raise ElementAlreadyExistsError(f"database {db!r} already exists")
-        self.fs.mkdirs(self.db_path(db))
-
-    def delete_db(self, db: str) -> None:
-        if not self.exist_db(db):
-            raise ElementNotFoundError(f"database {db!r} not found")
-        self.fs.delete(self.db_path(db), True)
-
-    def get_dbs(self) -> list[str]:
-        if not self.fs.isdir(self.base_dir):
-            return []
-        return sorted(
-            d for d in self.fs.listdir(self.base_dir) if self.fs.isdir(
-                posixpath.join(self.base_dir, d)
-            )
-        )
-
-    # -- sensors ------------------------------------------------------
-    def exist_sensor(self, db: str, sensor: str) -> bool:
-        return self.fs.isfile(self._config_path(db, sensor))
-
-    def create_sensor(self, db: str, sensor: str, config: SensorConfig) -> None:
-        if not self.exist_db(db):
-            raise ElementNotFoundError(f"database {db!r} not found")
-        if self.exist_sensor(db, sensor):
-            raise ElementAlreadyExistsError(f"sensor {db}.{sensor} already exists")
-        config.grid  # validate freq eagerly
-        self.fs.mkdirs(self.sensor_path(db, sensor))
-        self._write_config(db, sensor, config)
-
-    def delete_sensor(self, db: str, sensor: str) -> None:
-        if not self.exist_sensor(db, sensor):
-            raise ElementNotFoundError(f"sensor {db}.{sensor} not found")
-        self.fs.delete(self.sensor_path(db, sensor), True)
-
-    def get_sensors(self, db: str) -> list[str]:
-        if not self.exist_db(db):
-            raise ElementNotFoundError(f"database {db!r} not found")
-        out = []
-        for s in self.fs.listdir(self.db_path(db)):
-            if self.fs.isfile(posixpath.join(self.db_path(db), s, CONFIG_NAME)):
-                out.append(s)
-        return sorted(out)
-
-    def get_config(self, db: str, sensor: str) -> SensorConfig:
-        if not self.exist_sensor(db, sensor):
-            raise ElementNotFoundError(f"sensor {db}.{sensor} not found")
-        return SensorConfig.from_json(
-            json.loads(self.fs.read_bytes(self._config_path(db, sensor)).decode())
-        )
-
-    def _write_config(self, db: str, sensor: str, config: SensorConfig) -> None:
-        from .catalog import _check_metrics
-
-        _check_metrics(config.metrics)  # same chokepoint as the local catalog
-        self.fs.write_bytes_atomic(
-            self._config_path(db, sensor), json.dumps(config.to_json()).encode()
-        )
-
-    def update_metadata(self, db: str, sensor: str, metadata: dict[str, Any]) -> None:
-        cfg = self.get_config(db, sensor)
-        cfg.metadata = metadata
-        self._write_config(db, sensor, cfg)
-
-    def update_config(self, db: str, sensor: str, config: SensorConfig) -> None:
-        if not self.exist_sensor(db, sensor):
-            raise ElementNotFoundError(f"sensor {db}.{sensor} not found")
-        self._write_config(db, sensor, config)
-
-    # -- data-dir + lock/version hooks (engine-facing) ----------------
-    def data_exists(self, db: str, sensor: str) -> bool:
-        return self.fs.isdir(self.data_path(db, sensor))
-
-    def list_data_partitions(self, db: str, sensor: str) -> list[str]:
-        p = self.data_path(db, sensor)
-        return self.fs.listdir(p) if self.fs.isdir(p) else []
-
-    def delete_data_partition(self, db: str, sensor: str, entry: str) -> None:
-        self.fs.delete(posixpath.join(self.data_path(db, sensor), entry), True)
-
-    def write_lock(self, db: str, sensor: str, timeout: float, stale_after: float):
-        return HadoopSensorLock(
-            self.fs, self.sensor_path(db, sensor), timeout, stale_after
-        )
-
-    def get_version(self, db: str, sensor: str) -> int:
-        p = posixpath.join(self.sensor_path(db, sensor), "_version")
-        if not self.fs.isfile(p):
-            return 0
-        try:
-            return int(self.fs.read_bytes(p).decode().strip() or 0)
-        except ValueError:
-            return 0
-
-    def bump_version(self, db: str, sensor: str) -> int:
-        v = self.get_version(db, sensor) + 1
-        self.fs.write_bytes_atomic(
-            posixpath.join(self.sensor_path(db, sensor), "_version"), str(v).encode()
-        )
-        return v
-
-
-def is_remote_uri(base_dir: str) -> bool:
-    """True for scheme-qualified URIs (hdfs://, s3a://, file:/ ...)
-    that should go through the Hadoop FS catalog.  Schemes must be at
-    least two characters so Windows drive letters stay local paths."""
-    import re
-
-    return bool(re.match(r"^[A-Za-z][A-Za-z0-9+.\-]+:/", base_dir))
+    def touch(self, p: str, data: bytes) -> None:
+        """Refresh ``p``'s mtime by rewriting its content ``data``:
+        there is no portable utime (setTimes is a no-op on S3A)."""
+        with self._io(p):
+            self._write(p, data, overwrite=True)

@@ -15,6 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import functions as F
 
 from ..engine import PART_COL, TS_COL, OngTsdbSpark
+from ..pandas_edge import flatten_metrics
 
 
 @dataclass
@@ -113,7 +114,10 @@ def compact_sensor(
     fileutils.py:777-954; here it's a partition-pruned read->write).
     ``keep_recent_chunks`` leaves the hottest partitions untouched
     (the reference's uncompressed_chunks policy, chunker.py:65-72).
-    Returns the number of partitions rewritten."""
+    The rewrite is the upsert's fold with no batch: cells that predate
+    a metric are written as its fill value, and the write runs on up
+    to ``defaultParallelism`` tasks with one file per chunk.  Returns
+    the number of partitions rewritten."""
     with engine._sensor_lock(db, sensor), engine._file_lock(db, sensor):
         cfg = engine.catalog.get_config(db, sensor)
         # partition-directory listing (driver metadata, no data scan)
@@ -138,14 +142,10 @@ def compact_sensor(
         rewritten = cold_df.select(PART_COL).distinct().count()
         if rewritten == 0:
             return 0
-        (
-            cold_df.repartition(PART_COL)
-            .sortWithinPartitions(TS_COL)
-            .write.mode("overwrite")
-            .partitionBy(PART_COL)
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", codec)
-            .parquet(engine.catalog.data_path(db, sensor))
+        known = flatten_metrics(cfg.metrics)
+        width = min(max(1, engine.spark.sparkContext.defaultParallelism), rewritten)
+        engine._fold_and_write(
+            db, sensor, engine._fold_input(cold_df, cfg, known), known, width, codec=codec
         )
         engine.catalog.bump_version(db, sensor)
         return rewritten

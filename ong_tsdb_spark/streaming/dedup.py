@@ -314,29 +314,6 @@ def start_ledger_dedup(
     return writer.start()
 
 
-def _local_dir(path: str) -> str | None:
-    """Local filesystem directory behind ``path``, or None for a
-    remote/object-store URI (where the lockfile protocol does not
-    apply — see locks.py's conditional-PUT note).
-
-    Hadoop normalizes ``file://`` URIs to the single-slash form
-    ``file:/path`` (no netloc), so both spellings — and the rare
-    ``file://localhost/path`` — must resolve to the local directory;
-    a bare ``'://' not in path`` test misclassified ``file:/path`` as
-    local-with-scheme-prefix and the compaction lock was silently
-    skipped on a genuinely local ledger (ADVICE r13)."""
-    if path.startswith("file:"):
-        from urllib.parse import urlparse
-
-        parsed = urlparse(path)
-        if parsed.netloc not in ("", "localhost"):
-            return None  # remote file://host/... — not this machine
-        return parsed.path or None
-    if "://" not in path:
-        return path
-    return None
-
-
 def compact_ledger(
     spark: SparkSession,
     ledger_path: str,
@@ -394,6 +371,7 @@ def compact_ledger(
     backfills are sequential, rerunnable jobs, and the streaming
     layout is the durable protocol."""
     from ..locks import SensorFileLock, SensorLockTimeout
+    from ..object_store import local_path
 
     fs = _fs(spark, ledger_path)
     # a missing or not-yet-committed ledger is a benign no-op for a
@@ -404,7 +382,7 @@ def compact_ledger(
     if not fs.exists(ledger_path):
         return 0
     lock = None
-    local = _local_dir(ledger_path)
+    local = local_path(ledger_path)
     if local is not None and os.path.isdir(local):
         lock_kw = (
             {} if lock_stale_after is None
@@ -457,7 +435,7 @@ def compact_ledger(
             for e in fs.listdir(ledger_path):
                 if e not in keep:
                     fs.delete(f"{ledger_path}/{e}", recursive=True)
-            tmp_local = _local_dir(tmp)
+            tmp_local = local_path(tmp)
             assert local is not None and tmp_local is not None
             for e in os.listdir(tmp_local):
                 os.replace(
@@ -467,7 +445,7 @@ def compact_ledger(
         else:
             # no lockfile exists on a remote flat ledger — plain
             # overwrite (flat compaction there remains unserialized,
-            # as the object-store note in locks.py documents)
+            # as compact_ledger's docstring says)
             distinct.write.mode("overwrite").parquet(ledger_path)
         return n
     finally:

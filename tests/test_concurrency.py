@@ -102,78 +102,194 @@ def test_file_lock_cross_process_mutual_exclusion(tmp_path):
         assert int(f.read()) == 100
 
 
-def test_stale_lock_is_broken(tmp_path):
+# -- the writer-lock protocol, on both filesystem adapters -----------
+# Each case takes (adapter, sensor dir).  The local tests below run
+# them over LocalFs; test_hadoop_lock_protocol runs the same cases over
+# HadoopFs on a file: URI.  Hadoop's file: filesystem keeps a .crc
+# sidecar per file, so the cases age and replace the lockfile through
+# the adapter (or FileSystem.setTimes), never through os.
+
+
+def _local_sensor_dir(tmp_path):
     import os
+
+    from ong_tsdb_spark.object_store import LocalFs
+
+    d = str(tmp_path / "s")
+    os.makedirs(d)
+    return LocalFs(), d
+
+
+def _hadoop_sensor_dir(spark, tmp_path):
+    from ong_tsdb_spark.object_store import HadoopFs
+
+    d = "file:" + str(tmp_path / "s")
+    fs = HadoopFs(spark, d)
+    fs.mkdirs(d)
+    return fs, d
+
+
+def _set_mtime(fs, path: str, t: float) -> None:
+    import os
+
+    from ong_tsdb_spark.object_store import HadoopFs
+
+    if isinstance(fs, HadoopFs):
+        fs._fs.setTimes(fs.path(path), int(t * 1000), -1)
+    else:
+        os.utime(path, (t, t))
+
+
+def _stop_heartbeat(lock) -> None:
+    """Silence a holder like a paused VM (the lock stays on disk)."""
+    if lock._hb_stop is not None:
+        lock._hb_stop.set()
+        lock._hb_thread.join(timeout=2.0)
+        lock._hb_stop = lock._hb_thread = None
+
+
+def _stale_lock_is_broken(fs, sensor_dir):
     import time
 
     from ong_tsdb_spark.locks import SensorFileLock, SensorLockTimeout
 
-    sensor_dir = str(tmp_path / "s")
-    os.makedirs(sensor_dir)
     # a crashed writer left a lock; age it past stale_after
-    stale = SensorFileLock(sensor_dir)
+    stale = SensorFileLock(sensor_dir, fs=fs)
     stale.acquire()
-    old = time.time() - 1000
-    os.utime(stale.path, (old, old))
-    lk = SensorFileLock(sensor_dir, timeout=5.0, stale_after=300.0)
+    _stop_heartbeat(stale)
+    _set_mtime(fs, stale.path, time.time() - 1000)
+    lk = SensorFileLock(sensor_dir, timeout=5.0, stale_after=300.0, fs=fs)
     lk.acquire()  # breaks the stale lock instead of timing out
     lk.release()
     # a FRESH foreign lock is respected -> timeout
-    fresh = SensorFileLock(sensor_dir)
+    fresh = SensorFileLock(sensor_dir, fs=fs)
     fresh.acquire()
     with pytest.raises(SensorLockTimeout):
-        SensorFileLock(sensor_dir, timeout=0.3).acquire()
+        SensorFileLock(sensor_dir, timeout=0.3, fs=fs).acquire()
     fresh.release()
+    again = SensorFileLock(sensor_dir, timeout=5.0, fs=fs)
+    again.acquire()  # re-acquirable after release
+    again.release()
 
 
-def test_heartbeat_keeps_long_write_alive(tmp_path):
+def _heartbeat_keeps_long_write_alive(fs, sensor_dir):
     """Round-2 ADVICE: a LIVE holder whose write outlasts stale_after
     must not have its lock broken — the holder heartbeats (touches the
     lockfile), so waiters always see a fresh mtime."""
-    import os
     import time
 
     from ong_tsdb_spark.locks import SensorFileLock, SensorLockTimeout
 
-    sensor_dir = str(tmp_path / "s")
-    os.makedirs(sensor_dir)
-    holder = SensorFileLock(sensor_dir, stale_after=1.0)  # heartbeat ~0.25s
+    holder = SensorFileLock(sensor_dir, stale_after=1.0, fs=fs)  # heartbeat ~0.25s
     holder.acquire()
     time.sleep(2.5)  # well past stale_after in wall-clock age
     # the lock was ACQUIRED > stale_after ago, but heartbeats keep the
     # mtime fresh: the waiter must time out, not break it
     with pytest.raises(SensorLockTimeout):
-        SensorFileLock(sensor_dir, timeout=1.5, stale_after=1.0).acquire()
+        SensorFileLock(sensor_dir, timeout=1.5, stale_after=1.0, fs=fs).acquire()
     holder.release()
 
 
-def test_stale_break_spares_recreated_lock(tmp_path):
+def _stale_break_spares_recreated_lock(fs, sensor_dir):
     """The waiter remembers the (payload, mtime) it saw stale and only
-    unlinks on a second identical sighting — a lock re-created by a
+    deletes on a second identical sighting — a lock re-created by a
     different process between polls (new payload) survives."""
-    import os
+    import posixpath
 
+    from ong_tsdb_spark.locks import LOCK_NAME, SensorFileLock
+
+    lockfile = posixpath.join(sensor_dir, LOCK_NAME)
+    assert fs.create_exclusive(lockfile, b"999 1.0\n")
+    _set_mtime(fs, lockfile, 1.0)
+    waiter = SensorFileLock(sensor_dir, timeout=5.0, stale_after=300.0, fs=fs)
+    waiter._maybe_break_stale()  # first sighting: records, must NOT delete
+    assert fs.exists(lockfile)
+    # another process breaks + re-creates the lock between our polls
+    fs.delete(lockfile, recursive=False)
+    assert fs.create_exclusive(lockfile, b"1000 2.0\n")
+    _set_mtime(fs, lockfile, 1.0)  # even if its mtime looks stale too
+    waiter._maybe_break_stale()  # different payload -> new first sighting
+    assert fs.exists(lockfile)
+    waiter._maybe_break_stale()  # second identical sighting -> break
+    assert not fs.exists(lockfile)
+
+
+def _lock_release_checks_ownership(fs, sensor_dir):
+    """Code-review r9: a holder whose lock was stale-broken (VM pause
+    past the horizon) must NOT delete the NEW holder's lock on resume
+    — release only deletes the file when its payload is our own; the
+    heartbeat likewise stands down on a foreign payload."""
     from ong_tsdb_spark.locks import SensorFileLock
 
-    sensor_dir = str(tmp_path / "s")
-    os.makedirs(sensor_dir)
-    lockfile = os.path.join(sensor_dir, "_writer.lock")
-    with open(lockfile, "wb") as f:
-        f.write(b"999 1.0\n")
-    old = 1.0
-    os.utime(lockfile, (old, old))
-    waiter = SensorFileLock(sensor_dir, timeout=5.0, stale_after=300.0)
-    waiter._maybe_break_stale()  # first sighting: records, must NOT unlink
-    assert os.path.exists(lockfile)
-    # another process breaks + re-creates the lock between our polls
-    os.unlink(lockfile)
-    with open(lockfile, "wb") as f:
-        f.write(b"1000 2.0\n")
-    os.utime(lockfile, (old, old))  # even if its mtime looks stale too
-    waiter._maybe_break_stale()  # different payload -> new first sighting
-    assert os.path.exists(lockfile)
-    waiter._maybe_break_stale()  # second identical sighting -> break
-    assert not os.path.exists(lockfile)
+    a = SensorFileLock(sensor_dir, stale_after=300.0, fs=fs)
+    a.acquire()
+    # simulate the stale break + re-acquire while A is 'paused'
+    _stop_heartbeat(a)
+    fs.delete(a.path, recursive=False)
+    b = SensorFileLock(sensor_dir, stale_after=300.0, fs=fs)
+    b.acquire()
+    b_payload = fs.read_bytes(b.path)
+    # A resumes and releases: B's lock must survive
+    a.release()
+    assert fs.exists(b.path), "resumed stale holder deleted B's lock"
+    assert fs.read_bytes(b.path) == b_payload
+    # B's own release still works
+    b.release()
+    assert not fs.exists(b.path)
+
+
+def _lock_release_missing_file(fs, sensor_dir):
+    from ong_tsdb_spark.locks import SensorFileLock
+
+    a = SensorFileLock(sensor_dir, stale_after=300.0, fs=fs)
+    a.acquire()
+    fs.delete(a.path, recursive=False)
+    a.release()
+
+
+_LOCK_CASES = [
+    _stale_lock_is_broken,
+    _heartbeat_keeps_long_write_alive,
+    _stale_break_spares_recreated_lock,
+    _lock_release_checks_ownership,
+    _lock_release_missing_file,
+]
+
+
+def test_stale_lock_is_broken(tmp_path):
+    _stale_lock_is_broken(*_local_sensor_dir(tmp_path))
+
+
+def test_heartbeat_keeps_long_write_alive(tmp_path):
+    _heartbeat_keeps_long_write_alive(*_local_sensor_dir(tmp_path))
+
+
+def test_stale_break_spares_recreated_lock(tmp_path):
+    _stale_break_spares_recreated_lock(*_local_sensor_dir(tmp_path))
+
+
+def test_lock_release_checks_ownership(tmp_path):
+    _lock_release_checks_ownership(*_local_sensor_dir(tmp_path))
+
+
+def test_lock_release_missing_file_is_silent(tmp_path, caplog):
+    """The benign already-gone case stays log-free."""
+    import logging
+
+    with caplog.at_level(logging.WARNING, logger="ong_tsdb_spark.locks"):
+        _lock_release_missing_file(*_local_sensor_dir(tmp_path))
+    assert not caplog.records
+
+
+@pytest.mark.parametrize("case", _LOCK_CASES, ids=lambda c: c.__name__.strip("_"))
+def test_hadoop_lock_protocol(spark, tmp_path, caplog, case):
+    """The same lock cases over HadoopFs on a file: URI — the adapter
+    a hdfs:// or s3a:// catalog uses.  None of them logs a warning."""
+    import logging
+
+    with caplog.at_level(logging.WARNING, logger="ong_tsdb_spark.locks"):
+        case(*_hadoop_sensor_dir(spark, tmp_path))
+    assert not caplog.records
 
 
 def test_two_engine_instances_serialize_writes(spark, tmp_path):
@@ -230,36 +346,6 @@ def test_10k_point_round_trip(eng):
     )
     assert len(mid) == 101
     assert mid["active"].iloc[0] == 5000.0
-
-
-def test_lock_release_checks_ownership(tmp_path):
-    """Code-review r9: a holder whose lock was stale-broken (VM pause
-    past the horizon) must NOT unlink the NEW holder's lock on resume
-    — release only deletes the file when its payload is our own; the
-    heartbeat likewise stands down on a foreign payload."""
-    import os
-
-    from ong_tsdb_spark.locks import SensorFileLock
-
-    sensor_dir = str(tmp_path)
-    a = SensorFileLock(sensor_dir, stale_after=300.0)
-    a.acquire()
-    # simulate the stale break + re-acquire while A is 'paused'
-    if a._hb_stop is not None:  # stop A's heartbeat like a paused VM
-        a._hb_stop.set()
-        a._hb_thread.join(timeout=2.0)
-        a._hb_stop = a._hb_thread = None
-    os.unlink(a.path)
-    b = SensorFileLock(sensor_dir, stale_after=300.0)
-    b.acquire()
-    b_payload = open(b.path, "rb").read()
-    # A resumes and releases: B's lock must survive
-    a.release()
-    assert os.path.exists(b.path), "resumed stale holder deleted B's lock"
-    assert open(b.path, "rb").read() == b_payload
-    # B's own release still works
-    b.release()
-    assert not os.path.exists(b.path)
 
 
 def test_catalog_rejects_path_alias_names(tmp_path, spark):
@@ -319,18 +405,3 @@ def test_lock_release_unreadable_file_never_raises(tmp_path, caplog):
     assert any("could not read" in r.getMessage() for r in caplog.records)
     assert os.path.isdir(a.path), "release deleted a lock it could not verify"
     os.rmdir(a.path)
-
-
-def test_lock_release_missing_file_is_silent(tmp_path, caplog):
-    """The benign already-gone case stays log-free."""
-    import logging
-    import os
-
-    from ong_tsdb_spark.locks import SensorFileLock
-
-    a = SensorFileLock(str(tmp_path), stale_after=300.0)
-    a.acquire()
-    os.unlink(a.path)
-    with caplog.at_level(logging.WARNING, logger="ong_tsdb_spark.locks"):
-        a.release()
-    assert not caplog.records

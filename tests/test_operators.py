@@ -464,6 +464,33 @@ def test_maintenance_verify_and_compact(eng):
     assert eng.read_pandas("d", "s")["v"].sum() == 50.0
 
 
+def test_compact_schema_grown_sensor_keeps_fill_values(eng):
+    """Compaction rewrites through the upsert's fold: cells from before
+    a schema growth are written as the metric's fill value, so the
+    pyarrow fast path and the Spark read still agree afterwards (a raw
+    rewrite stored them as NULL, which the fast path read as NaN)."""
+    from ong_tsdb_spark.plans import maintenance
+
+    eng.create_sensor("d", "g", "1s", ["a"])
+    t0 = 1672617600 // 16384 * 16384
+    old = pd.to_datetime([t0 + i for i in range(4)], unit="s", utc=True)
+    eng.write_df("d", "g", pd.DataFrame({"a": np.arange(4.0)}, index=old))
+    new = pd.to_datetime([t0 + 16384, t0 + 16385], unit="s", utc=True)
+    eng.write_df(
+        "d", "g", pd.DataFrame({"a": [5.0, 6.0], "b": [3.0, 3.0]}, index=new),
+        fill_value=7.0,
+    )
+    before = eng.read_pandas("d", "g")
+    assert before["b"].tolist() == [7, 7, 7, 7, 3, 3]
+
+    assert maintenance.compact_sensor(eng, "d", "g", codec="snappy") == 2
+    fast = eng.read_pandas("d", "g")
+    spark_read = eng.read("d", "g").toPandas()
+    assert fast.equals(before)
+    assert fast["b"].tolist() == spark_read["b"].tolist()
+    assert fast["a"].tolist() == spark_read["a"].tolist()
+
+
 def test_streaming_ingest(eng, tmp_path):
     from ong_tsdb_spark.streaming import ingest
 
@@ -2346,15 +2373,15 @@ def test_local_dir_uri_forms():
     path so the compaction lock engages; remote schemes and
     file://otherhost stay None (ADVICE r13: the old '://' test
     silently skipped the lock for file:/path)."""
-    from ong_tsdb_spark.streaming.dedup import _local_dir
+    from ong_tsdb_spark.object_store import local_path
 
-    assert _local_dir("/tmp/ledger") == "/tmp/ledger"
-    assert _local_dir("file:///tmp/ledger") == "/tmp/ledger"
-    assert _local_dir("file:/tmp/ledger") == "/tmp/ledger"
-    assert _local_dir("file://localhost/tmp/ledger") == "/tmp/ledger"
-    assert _local_dir("file://otherhost/tmp/ledger") is None
-    assert _local_dir("s3a://bucket/ledger") is None
-    assert _local_dir("hdfs://nn/ledger") is None
+    assert local_path("/tmp/ledger") == "/tmp/ledger"
+    assert local_path("file:///tmp/ledger") == "/tmp/ledger"
+    assert local_path("file:/tmp/ledger") == "/tmp/ledger"
+    assert local_path("file://localhost/tmp/ledger") == "/tmp/ledger"
+    assert local_path("file://otherhost/tmp/ledger") is None
+    assert local_path("s3a://bucket/ledger") is None
+    assert local_path("hdfs://nn/ledger") is None
 
 
 def test_compact_ledger_flat_layout_keeps_lock_dir_intact(spark, tmp_path):
